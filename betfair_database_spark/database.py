@@ -140,31 +140,26 @@ class BetfairDatabase:
     def index(self, force: bool = False) -> int:
         """Index the directory; returns the number of indexed markets
         (reference database.py:55-80)."""
-        if self._index_path.exists():
-            if force:
-                shutil.rmtree(self._index_path)
-            else:
-                raise IndexExistsError(
-                    self.database_dir, " Use force=True option to reindex the database."
-                )
         with self._writer_lock():
+            # checked and removed under the lock: a forced reindex must
+            # never delete an index another writer is committing into
+            if self._index_path.exists():
+                if not force:
+                    raise IndexExistsError(
+                        self.database_dir,
+                        " Use force=True option to reindex the database.",
+                    )
+                shutil.rmtree(self._index_path)
             frame, counters = build_index_frame(self.spark, str(self.database_dir))
             counters.rows_inserted = self._write_index(frame, str(self._index_path))
             from betfair_database_spark.rollup import (
-                rollup_build,
-                rollup_path,
+                rollup_specs,
                 spec_rollup_build,
-                spec_rollup_list,
-                spec_rollup_path,
             )
 
-            if rollup_path(self.database_dir).exists():
-                rollup_build(self)  # full index build → full rollup rebuild
-            for nm in spec_rollup_list(self):
-                from betfair_database_spark.rollup import _meta_read
-
-                meta = _meta_read(spec_rollup_path(self.database_dir, nm))
-                spec_rollup_build(self, nm, meta["spec"])
+            # full index build → full rebuild of every rollup
+            for name, spec, _ in rollup_specs(self):
+                spec_rollup_build(self, name, spec)
         self.last_counters = counters
         return counters.rows_inserted
 
@@ -530,20 +525,24 @@ class BetfairDatabase:
         (hypertable-rollup) engine extension with no reference analogue
         (see rollup.py for the maintenance and consistency contract).
 
-        No arguments → the built-in per-(eventTypeId, start date) rollup
-        (unchanged behavior). With ``name`` + ``dims`` + ``aggs`` → a
-        NAMED user-spec rollup (round 9): ``dims`` are index columns or
-        ``alias=SQL_EXPR`` derived dims, ``aggs`` are ``alias=op(col)``
-        with op in count/sum/sumsq/min/max/approx_count_distinct, or
+        No arguments → the built-in per-(eventTypeId, start date) rollup,
+        which is the reserved spec ``rollup.BUILTIN_SPEC`` (also the heal
+        for a stale or older-format built-in). With ``name`` + ``dims`` +
+        ``aggs`` → a NAMED user-spec rollup (round 9): ``dims`` are index
+        columns or ``alias=SQL_EXPR`` derived dims, ``aggs`` are
+        ``alias=op(col)`` with op in
+        count/sum/sumsq/min/max/approx_count_distinct, or
         ``alias=hist(col, lo, hi, nbins)`` (round 12) — a mergeable
         fixed-bin histogram partial that serves
         ``approx_percentile_hist(col, q)`` select() queries. Any number of
-        named rollups coexist; every one is maintained by the same
-        partition-incremental protocol and guarded by StaleRollupError.
-        Returns the stored row count."""
+        named rollups coexist; they and the built-in share one mechanism:
+        the same partition-incremental maintenance, atomic swap,
+        StaleRollupError guard and auto-routing. Returns the stored row
+        count."""
         from betfair_database_spark.rollup import (
+            BUILTIN_SPEC,
+            _meta_read,
             parse_spec,
-            rollup_build,
             spec_rollup_build,
             spec_rollup_path,
         )
@@ -554,7 +553,7 @@ class BetfairDatabase:
             if name is None:
                 if dims or aggs:
                     raise ValueError("dims/aggs require a rollup name")
-                return rollup_build(self)
+                return spec_rollup_build(self, None, BUILTIN_SPEC)
             if (dims is None) != (aggs is None):
                 # a lone half would silently fall into the heal path and
                 # discard the caller's new spec — refuse instead
@@ -564,8 +563,6 @@ class BetfairDatabase:
                 )
             if dims is None or aggs is None:
                 # re-create from the persisted spec (the heal path)
-                from betfair_database_spark.rollup import _meta_read
-
                 meta = _meta_read(spec_rollup_path(self.database_dir, name))
                 if meta is None or "spec" not in meta:
                     raise ValueError(
@@ -578,16 +575,16 @@ class BetfairDatabase:
             return spec_rollup_build(self, name, spec)
 
     def rollup(self, name: str | None = None) -> DataFrame:
-        """The committed rollup as a DataFrame — the built-in per-(sport,
-        day) one by default, a named spec rollup when ``name`` is given
-        (served at USER grain: partials merged at read time). Raises
+        """The committed rollup as a DataFrame at USER grain (partials
+        merged at read time) — the built-in per-(sport, day) one by
+        default, with ``rollup.ROLLUP_SCHEMA``'s columns and types, or a
+        named spec rollup when ``name`` is given. Raises
         RollupMissingError when none was materialized, StaleRollupError
         when the rollup lags the index (crash between index commit and
-        rollup swap)."""
-        from betfair_database_spark.rollup import rollup_read, spec_rollup_read
+        rollup swap) or is a built-in written by an older storage
+        format."""
+        from betfair_database_spark.rollup import spec_rollup_read
 
-        if name is None:
-            return rollup_read(self)
         return spec_rollup_read(self, name)
 
     def drop_rollup(self, name: str) -> bool:
@@ -768,15 +765,6 @@ class BetfairDatabase:
                 str(self._index_path)
             )
         return df.select(*SQL_TABLE_COLUMNS)  # contract order, partition col included
-
-    def _rewrite_index(self, frame: DataFrame) -> None:
-        """Atomic-ish full-index swap: materialize to a sibling dir, then
-        replace. Only used when the whole index must change; partition-scoped
-        maintenance goes through _upsert_partitions."""
-        tmp = self._index_path.with_suffix(".swap")
-        self._write_index(frame, str(tmp))
-        shutil.rmtree(self._index_path)
-        shutil.move(str(tmp), str(self._index_path))
 
     def _partition_filter(self, touched: list[str | None]) -> F.Column:
         """Predicate matching rows in the given eventTypeId partitions

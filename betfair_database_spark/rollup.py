@@ -1,40 +1,58 @@
-"""Incrementally-maintained materialized rollup over the market index.
+"""Incrementally-maintained materialized rollups over the market index.
 
-A continuous-aggregate (hypertable-rollup) analogue for the index: a
-small at-rest summary table of per-(eventTypeId, start date) market
-statistics that ``insert()``/``clean()`` keep in sync without re-scanning
-the index. The reference has no such feature (its SQLite index is always
-queried live); this is an engine-level extension for the 100 TB shape,
-where "how many markets per sport per day" should not cost an index scan.
+A continuous-aggregate (hypertable-rollup) analogue for the index: small
+at-rest summary tables that ``insert()``/``clean()`` keep in sync without
+re-scanning the index. The reference has no such feature (its SQLite
+index is always queried live); this is an engine-level extension for the
+100 TB shape, where "how many markets per sport per day" should not cost
+an index scan.
+
+One mechanism serves every rollup. A rollup is a SPEC — group-by dims
+plus mergeable aggregates (``parse_spec``) — stored as per-(partition,
+dims) partials (``summarize_spec``), committed by one atomic swap
+(``_spec_atomic_swap``), served at user grain (``spec_view``) and routed
+by one loop (``route_select``). Named rollups (``create_rollup(name=,
+dims=, aggs=)``) live at ``.betfairdatabaserollup-<name>.parquet``. The
+built-in per-(sport, day) rollup is the reserved ``BUILTIN_SPEC`` at
+``.betfairdatabaserollup.parquet``, routed as ``rollup:builtin`` after
+the named ones; ``rollup()`` serves it with ``ROLLUP_SCHEMA``'s columns
+and types, the same columns ``summarize`` computes from raw rows.
 
 Maintenance contract
 --------------------
 Index maintenance rewrites whole ``eventTypeId=`` partitions
-(``database._upsert_partitions``), so the rollup updates at the same
-granularity: summary rows for TOUCHED partitions are recomputed from the
-replacement frame (already checkpointed in memory by the upsert), summary
-rows for untouched partitions are carried over from the previous rollup
-file. The index parquet is never re-read during an incremental update —
-pinned by ``test_maintenance.py`` (``_read_index`` patched to raise).
-Compute is O(replacement rows + rollup size); the at-rest rollup is
-bounded by |eventTypeId| x |days|, never by market count.
+(``database._upsert_partitions``), so a rollup updates at the same
+granularity: partials for TOUCHED partitions are recomputed from the
+replacement frame (already checkpointed in memory by the upsert),
+partials for untouched partitions are carried over from the previous
+rollup file. The index parquet is never re-read during an incremental
+update — pinned by ``test_maintenance.py`` (``_read_index`` patched to
+raise). Compute is O(replacement rows + rollup size); the at-rest rollup
+is bounded by |eventTypeId| x |dim values|, never by market count.
 
 Consistency
 -----------
 Every rollup commit records the index manifest snapshot number it was
-derived from (``_rollup_meta.json`` inside the rollup directory — the
-leading underscore hides it from Spark's file listing). The rollup swap
-happens strictly AFTER the index commit, so a crash in between leaves a
-rollup one snapshot behind; ``rollup()`` compares snapshot numbers and
-raises ``StaleRollupError`` instead of serving stale aggregates, and
-``create_rollup()`` is the (full-rebuild) heal. The swap itself is
-temp-write + directory replace: a crash mid-swap can only lose the rollup
-entirely (detected as missing), never serve a torn file set.
+derived from and its spec (``_rollup_meta.json`` inside the rollup
+directory — the leading underscore hides it from Spark's file listing).
+The rollup swap happens strictly AFTER the index commit, so a crash in
+between leaves a rollup one snapshot behind; ``rollup()`` compares
+snapshot numbers and raises ``StaleRollupError`` instead of serving stale
+aggregates, and ``create_rollup()`` is the (full-rebuild) heal. The swap
+itself is temp-write + directory replace: a crash mid-swap can only lose
+the rollup entirely (detected as missing), never serve a torn file set.
 
-All aggregates are additive/mergeable (counts, sums, min/max) so the
-carry-over + recompute composition is exact. marketStartTime is the
-index's ISO-8601 string; ISO-8601 min/max under string ordering equals
-chronological min/max.
+Storage format: a built-in rollup whose meta does not carry
+``BUILTIN_SPEC`` was written before the built-in became a spec (final
+aggregates under other column names; format 1 also coalesced all-NULL
+sums to 0). It is never a routing candidate, ``rollup()`` refuses it,
+and the next ``insert()``/``clean()``/``index()``/``create_rollup()``
+rebuilds it in full.
+
+All aggregates are additive/mergeable (counts, sums, min/max, sketches)
+so the carry-over + recompute composition is exact. marketStartTime is
+the index's ISO-8601 string; ISO-8601 min/max under string ordering
+equals chronological min/max.
 """
 
 from __future__ import annotations
@@ -56,15 +74,6 @@ from pyspark.sql.types import (
 
 ROLLUP_DIRNAME = ".betfairdatabaserollup.parquet"
 _META_NAME = "_rollup_meta.json"
-# Storage-format version of the BUILT-IN rollup (round-12 ADVICE).
-# Format 2 = sums store NULL (not coalesced 0) for all-NULL cells
-# (round-11 parity fix). A pre-round-11 rollup keeps 0s in partitions
-# never touched since (rollup_update only recomputes touched ones), so
-# routed sum over such a cell would return 0 while the scan returns
-# NULL. A format-1 rollup is therefore NEVER a routing candidate,
-# rollup_read refuses it loudly, and maintenance heals it by a one-time
-# full rebuild.
-ROLLUP_FORMAT = 2
 
 ROLLUP_SCHEMA = StructType(
     [
@@ -84,10 +93,9 @@ ROLLUP_SCHEMA = StructType(
 def summarize(index_df: DataFrame) -> DataFrame:
     """The rollup aggregate: per-(eventTypeId, start date) market stats.
 
-    Pure function of index rows — used for the full build, the touched-
-    partition recompute, and the from-scratch reference in tests. One
-    hash aggregate with map-side partials; no window, no shuffle beyond
-    the group-by exchange.
+    Pure function of index rows — used for the from-scratch reference in
+    tests and the streaming rollup fold. One hash aggregate with map-side
+    partials; no window, no shuffle beyond the group-by exchange.
     """
     return index_df.groupBy(
         F.col("eventTypeId"),
@@ -118,98 +126,19 @@ def _meta_read(path: Path) -> dict | None:
         return None
 
 
-def _atomic_swap(db, frame: DataFrame, index_snapshot: int) -> int:
-    """Write ``frame`` + meta to a sibling temp dir, then replace the live
-    rollup. The rollup is group-cardinality-sized, so one part-file."""
-    live = rollup_path(db.database_dir)
-    tmp = live.with_suffix(".swap")
-    if tmp.exists():
-        shutil.rmtree(tmp)
-    out = frame.select(*[f.name for f in ROLLUP_SCHEMA.fields])
-    out.coalesce(1).write.mode("overwrite").parquet(str(tmp))
-    n = db.spark.read.schema(ROLLUP_SCHEMA).parquet(str(tmp)).count()
-    (tmp / _META_NAME).write_text(
-        json.dumps(
-            {
-                "index_snapshot": index_snapshot,
-                "rows": n,
-                "format": ROLLUP_FORMAT,
-            }
-        )
-    )
-    if live.exists():
-        shutil.rmtree(live)
-    tmp.rename(live)
-    return n
-
-
-def rollup_build(db) -> int:
-    """Full rollup (re)build from the live index. Returns row count."""
-    from betfair_database_spark.database import _manifest_snapshot_no
-
-    snap = _manifest_snapshot_no(db._index_path)
-    return _atomic_swap(db, summarize(db._read_index()), snap)
-
-
-def rollup_update(db, repl: DataFrame, touched: list) -> None:
-    """Partition-incremental rollup maintenance, called by the index upsert
-    AFTER its manifest commit. ``repl`` is the checkpointed replacement
-    frame (may contain rows outside ``touched``; filtered here exactly as
-    the upsert filters), ``touched`` the eventTypeId values whose index
-    partitions were rewritten. No-op when no rollup is materialized.
-
-    Reads: the previous rollup file (small) + ``repl`` (in memory).
-    Never re-reads the index parquet.
-    """
-    from betfair_database_spark.database import _manifest_snapshot_no
-
-    live = rollup_path(db.database_dir)
-    if not live.exists() or not touched:
-        return
-    snap = _manifest_snapshot_no(db._index_path)
-    meta = _meta_read(live)
-    if meta is not None and meta.get("format", 1) < ROLLUP_FORMAT:
-        # pre-format-2 rollup: untouched partitions may carry coalesced
-        # 0s where format 2 stores NULL — carrying them over would
-        # launder the wrong values forever; heal by a one-time full
-        # rebuild (round-12 ADVICE)
-        rollup_build(db)
-        return
-    if meta is None or meta.get("index_snapshot") not in (snap - 1, snap):
-        # Snapshot numbers are sequential, so the only safe incremental
-        # bases are snap-1 (the normal post-commit call: rollup was fresh
-        # at the previous snapshot) and snap itself (an idempotent re-fold:
-        # touched partitions are recomputed from ``repl`` either way). Any
-        # other value means a prior maintenance op crashed between its
-        # index commit and rollup swap (or the index was force-rebuilt);
-        # carrying those rows over and stamping ``snap`` would launder the
-        # staleness past the StaleRollupError guard. Heal by a full
-        # rebuild from the live index instead.
-        rollup_build(db)
-        return
-    keep = db.spark.read.schema(ROLLUP_SCHEMA).parquet(str(live)).where(
-        ~db._partition_filter(touched)
-    )
-    fresh = summarize(repl.where(db._partition_filter(touched)))
-    _atomic_swap(
-        db,
-        materialize(keep.unionByName(fresh), "rollup-replacement"),
-        snap,
-    )
-
-
 # =========================================================================
-# Generalized rollup specs (round 9): user-declared dims + additive aggs
+# Rollup specs (round 9): declared dims + additive aggs
 # =========================================================================
 #
-# The single hard-coded per-(sport, day) rollup above serves one query
-# shape; reference users group by venue, country, marketType just as often
-# (reference README query shapes). A spec declares group-by dims (index
-# columns, or alias=EXPR derived columns) and mergeable aggregates —
-# count / sum / min / max / approx_count_distinct (HLL sketch) — and gets
-# the SAME machinery: materialized beside the index under a name,
-# partition-incrementally maintained by insert()/clean() (never re-reads
-# the index), snapshot-stamped, StaleRollupError-guarded.
+# A spec declares group-by dims (index columns, or alias=EXPR derived
+# columns) and mergeable aggregates — count / sum / min / max /
+# approx_count_distinct (HLL sketch) and the moment, histogram and
+# quantile-sketch partials below — and gets the whole machinery:
+# materialized beside the index, partition-incrementally maintained by
+# insert()/clean() (never re-reads the index), snapshot-stamped,
+# StaleRollupError-guarded, auto-routed. Named specs cover the query
+# shapes reference users group by (venue, country, marketType); the
+# built-in per-(sport, day) rollup is one more spec, BUILTIN_SPEC.
 #
 # Storage grain: the at-rest frame always includes eventTypeId (the index
 # partition key) in front of the user dims, with PARTIAL aggregates per
@@ -420,11 +349,8 @@ def hist_params_for(db, cols: set) -> dict:
     function is an error, and two specs binning the same column
     differently raise rather than silently picking one."""
     out: dict = {}
-    for name in spec_rollup_list(db):
-        meta = _meta_read(spec_rollup_path(db.database_dir, name))
-        if meta is None or "spec" not in meta:
-            continue
-        for a in meta["spec"]["aggs"]:
+    for _, spec, _ in rollup_specs(db):
+        for a in spec["aggs"]:
             if a["op"] != "hist" or a["col"] not in cols:
                 continue
             params = (a["lo"], a["hi"], a["nbins"])
@@ -866,99 +792,188 @@ def spec_rollup_path(database_dir: Path, name: str) -> Path:
     return Path(database_dir) / f".betfairdatabaserollup-{name}.parquet"
 
 
+# The built-in per-(sport, day) rollup: a reserved spec, stored at
+# ROLLUP_DIRNAME and addressed as name None. Its user-grain view has
+# exactly ROLLUP_SCHEMA's columns, in order.
+BUILTIN_SPEC = parse_spec(
+    ["eventTypeId", "startDate=to_date(substring(marketStartTime, 1, 10))"],
+    [
+        "markets=count()",
+        "bspMarkets=sum(bspMarket)",
+        "inPlayMarkets=sum(turnInPlayEnabled)",
+        "settledMarkets=count(marketSettledTime)",
+        "runnersTotal=sum(runners)",
+        "firstStart=min(marketStartTime)",
+        "lastStart=max(marketStartTime)",
+    ],
+)
+
+
+def _path(db, name: str | None) -> Path:
+    if name is None:
+        return rollup_path(db.database_dir)
+    return spec_rollup_path(db.database_dir, name)
+
+
 def _spec_atomic_swap(db, path: Path, frame: DataFrame, meta: dict) -> int:
-    """Same temp-write + directory-replace commit as the default rollup,
-    but schema-free (spec schemas vary) and carrying the spec in meta."""
+    """Write ``frame`` + meta to a sibling temp dir, then replace the live
+    rollup. A rollup is group-cardinality-sized, so one part-file. The
+    meta records the frame's schema for ``_read_partials``."""
     tmp = path.with_suffix(".swap")
     if tmp.exists():
         shutil.rmtree(tmp)
+    schema = frame.schema
     frame.coalesce(1).write.mode("overwrite").parquet(str(tmp))
-    n = db.spark.read.parquet(str(tmp)).count()
-    (tmp / _META_NAME).write_text(json.dumps({**meta, "rows": n}))
+    n = db.spark.read.schema(schema).parquet(str(tmp)).count()
+    (tmp / _META_NAME).write_text(
+        json.dumps({**meta, "rows": n, "schema": schema.jsonValue()})
+    )
     if path.exists():
         shutil.rmtree(path)
     tmp.rename(path)
     return n
 
 
-def spec_rollup_build(db, name: str, spec: dict) -> int:
-    """Full (re)build of a named spec rollup from the live index. Returns
-    the stored internal (eventTypeId x dims) row count; the user view is
-    a cheap re-aggregate of it."""
+def _read_partials(db, path: Path, meta: dict) -> DataFrame:
+    """A rollup's stored partials frame. Reading with the schema its
+    commit recorded skips the Spark job that parquet schema inference
+    runs on every read; rollups committed before the schema was recorded
+    fall back to inference."""
+    reader = db.spark.read
+    if "schema" in meta:
+        reader = reader.schema(StructType.fromJson(meta["schema"]))
+    return reader.parquet(str(path))
+
+
+def spec_rollup_build(db, name: str | None, spec: dict) -> int:
+    """Full (re)build of a rollup from the live index (``name`` None =
+    the built-in). Returns the stored internal (eventTypeId x dims) row
+    count; the user view is a cheap re-aggregate of it."""
     from betfair_database_spark.database import _manifest_snapshot_no
 
     snap = _manifest_snapshot_no(db._index_path)
-    internal = summarize_spec(db._read_index(), spec)
     return _spec_atomic_swap(
         db,
-        spec_rollup_path(db.database_dir, name),
-        internal,
+        _path(db, name),
+        summarize_spec(db._read_index(), spec),
         {"index_snapshot": snap, "spec": spec, "name": name},
     )
 
 
-def spec_rollup_list(db) -> list[str]:
-    """Names of materialized spec rollups (directory scan, no Spark)."""
+def rollup_specs(db) -> list[tuple]:
+    """``(name, spec, meta)`` of every materialized rollup, in routing
+    order: named rollups sorted by name, then the built-in (name None,
+    spec BUILTIN_SPEC) when its directory exists. The built-in's meta may
+    be None or lack the spec (torn, or an older storage format): readers
+    of its stored data check ``meta["spec"] == spec``. Directory scan, no
+    Spark."""
     out = []
     for p in Path(db.database_dir).glob(".betfairdatabaserollup-*.parquet"):
         meta = _meta_read(p)
         if meta and "spec" in meta:
-            out.append(meta["name"])
-    return sorted(out)
+            out.append((meta["name"], meta["spec"], meta))
+    out.sort(key=lambda t: t[0])
+    live = rollup_path(db.database_dir)
+    if live.exists():
+        out.append((None, BUILTIN_SPEC, _meta_read(live)))
+    return out
+
+
+def _maintain(db, name, spec: dict, meta, repl: DataFrame, touched) -> None:
+    """Partition-incremental maintenance of ONE rollup, called by the
+    index upsert AFTER its manifest commit. ``repl`` is the checkpointed
+    replacement frame (may contain rows outside ``touched``; filtered
+    here exactly as the upsert filters), ``touched`` the eventTypeId
+    values whose index partitions were rewritten.
+
+    Reads: the previous rollup file (small) + ``repl`` (in memory).
+    Never re-reads the index parquet."""
+    from betfair_database_spark.database import _manifest_snapshot_no
+
+    snap = _manifest_snapshot_no(db._index_path)
+    if (
+        meta is None
+        or meta.get("spec") != spec
+        or meta.get("index_snapshot") not in (snap - 1, snap)
+    ):
+        # Snapshot numbers are sequential, so the only safe incremental
+        # bases are snap-1 (the normal post-commit call: rollup was fresh
+        # at the previous snapshot) and snap itself (an idempotent re-fold:
+        # touched partitions are recomputed from ``repl`` either way). Any
+        # other value means a prior maintenance op crashed between its
+        # index commit and rollup swap (or the index was force-rebuilt);
+        # carrying those rows over and stamping ``snap`` would launder the
+        # staleness past the StaleRollupError guard. A meta without the
+        # spec is an older storage format whose rows cannot be carried.
+        # Heal by a full rebuild from the live index instead.
+        spec_rollup_build(db, name, spec)
+        return
+    path = _path(db, name)
+    keep = _read_partials(db, path, meta).where(~db._partition_filter(touched))
+    fresh = summarize_spec(repl.where(db._partition_filter(touched)), spec)
+    _spec_atomic_swap(
+        db,
+        path,
+        materialize(keep.unionByName(fresh), "rollup-replacement"),
+        {"index_snapshot": snap, "spec": spec, "name": name},
+    )
+
+
+def rollup_update(db, repl: DataFrame, touched: list) -> None:
+    """Maintain the built-in rollup after an index upsert (see
+    ``_maintain``). No-op when it is not materialized."""
+    live = rollup_path(db.database_dir)
+    if touched and live.exists():
+        _maintain(db, None, BUILTIN_SPEC, _meta_read(live), repl, touched)
 
 
 def spec_rollup_update(db, repl: DataFrame, touched: list) -> None:
-    """Partition-incremental maintenance of EVERY named spec rollup —
-    same contract as rollup_update (called strictly after the index
-    commit, never re-reads the index, heals snapshot gaps by rebuild)."""
-    from betfair_database_spark.database import _manifest_snapshot_no
-
+    """Maintain EVERY named rollup after an index upsert (see
+    ``_maintain``)."""
     if not touched:
         return
-    snap = _manifest_snapshot_no(db._index_path)
-    for name in spec_rollup_list(db):
-        path = spec_rollup_path(db.database_dir, name)
-        meta = _meta_read(path)
-        if meta is None:
-            continue
-        spec = meta["spec"]
-        if meta.get("index_snapshot") not in (snap - 1, snap):
-            spec_rollup_build(db, name, spec)  # heal: see rollup_update
-            continue
-        keep = db.spark.read.parquet(str(path)).where(
-            ~db._partition_filter(touched)
-        )
-        fresh = summarize_spec(
-            repl.where(db._partition_filter(touched)), spec
-        )
-        _spec_atomic_swap(
-            db,
-            path,
-            materialize(keep.unionByName(fresh), "spec-rollup-replacement"),
-            {"index_snapshot": snap, "spec": spec, "name": name},
-        )
+    for name, spec, meta in rollup_specs(db):
+        if name is not None:
+            _maintain(db, name, spec, meta, repl, touched)
 
 
-def spec_rollup_read(db, name: str) -> DataFrame:
-    """The committed named rollup at USER grain, freshness-checked."""
+def spec_rollup_read(db, name: str | None) -> DataFrame:
+    """A committed rollup at USER grain, freshness-checked (``name``
+    None = the built-in, served with ROLLUP_SCHEMA's columns and types)."""
     from betfair_database_spark.database import _manifest_snapshot_no
     from betfair_database_spark.exceptions import (
         RollupMissingError,
         StaleRollupError,
     )
 
-    path = spec_rollup_path(db.database_dir, name)
+    label = "the built-in rollup" if name is None else f"rollup {name!r}"
+    path = _path(db, name)
     meta = _meta_read(path)
     if meta is None:
-        raise RollupMissingError(f"{db.database_dir} (rollup {name!r})")
+        raise RollupMissingError(
+            db.database_dir if name is None else f"{db.database_dir} ({label})"
+        )
+    if name is None and meta.get("spec") != BUILTIN_SPEC:
+        raise StaleRollupError(
+            "the built-in rollup was written by an older storage format "
+            "(its meta carries no reserved spec) — call create_rollup() "
+            "to rebuild (any insert()/clean()/index() also heals it)"
+        )
     current = _manifest_snapshot_no(db._index_path)
     if meta.get("index_snapshot") != current:
         raise StaleRollupError(
-            f"rollup {name!r} was built at index snapshot "
+            f"{label} was built at index snapshot "
             f"{meta.get('index_snapshot')} but the index is at snapshot "
-            f"{current} — call create_rollup(name=...) to rebuild"
+            f"{current} — a maintenance write crashed between the index "
+            "commit and the rollup swap; call create_rollup("
+            f"{'' if name is None else f'name={name!r}'}) to rebuild"
         )
-    return spec_view(db.spark.read.parquet(str(path)), meta["spec"])
+    view = spec_view(_read_partials(db, path, meta), meta["spec"])
+    if name is None:
+        view = view.select(
+            *[F.col(f.name).cast(f.dataType) for f in ROLLUP_SCHEMA.fields]
+        )
+    return view
 
 
 # =========================================================================
@@ -1005,20 +1020,6 @@ _WHERE_KEYWORDS = {
     "AND", "OR", "NOT", "IN", "IS", "NULL", "BETWEEN",
     "LIKE", "GLOB", "ESCAPE", "TRUE", "FALSE",
 }
-
-# the built-in per-(sport, day) rollup as a routing candidate: its stored
-# columns are FINAL aggregates at (eventTypeId, startDate) grain, which
-# re-merge exactly (counts/sums by sum, min/max by min/max)
-_BUILTIN_AGG_MAP = {
-    ("count", None): ("markets", "sum"),
-    ("sum", "bspMarket"): ("bspMarkets", "sum"),
-    ("sum", "turnInPlayEnabled"): ("inPlayMarkets", "sum"),
-    ("count", "marketSettledTime"): ("settledMarkets", "sum"),
-    ("sum", "runners"): ("runnersTotal", "sum"),
-    ("min", "marketStartTime"): ("firstStart", "min"),
-    ("max", "marketStartTime"): ("lastStart", "max"),
-}
-
 
 def parse_select_shape(columns, group_by):
     """Classify a select() column list as an aggregate query: returns
@@ -1232,11 +1233,8 @@ def derived_dim_exprs(db, names) -> dict:
 
     want = {n for n in names if _IDENT_RE.match(n)}
     out: dict = {}
-    for name in spec_rollup_list(db):
-        meta = _meta_read(spec_rollup_path(db.database_dir, name))
-        if meta is None or "spec" not in meta:
-            continue
-        for d in meta["spec"]["dims"]:
+    for _, spec, _ in rollup_specs(db):
+        for d in spec["dims"]:
             a = d["alias"]
             if (
                 d["expr"] is None
@@ -1290,21 +1288,21 @@ def route_select(db, columns, where, group_by, local_tz=None):
         if w is None:
             return None
         wid = w
-    needed_dims = set(dims_sel) | set(gb) | wid
     try:
         current = _manifest_snapshot_no(db._index_path)
     except OSError:
         return None
 
-    # spec rollups first (they can cover arbitrary dims), built-in last
-    for name in spec_rollup_list(db):
-        path = spec_rollup_path(db.database_dir, name)
-        meta = _meta_read(path)
-        if meta is None or meta.get("index_snapshot") != current:
-            continue  # stale or torn: not a candidate, NEVER an error
-        spec = meta["spec"]
-        from betfair_database_spark.const import SQL_TABLE_COLUMNS
+    from betfair_database_spark.const import SQL_TABLE_COLUMNS
 
+    # named rollups first (sorted by name), the built-in last
+    for name, spec, meta in rollup_specs(db):
+        if (
+            meta is None
+            or meta.get("spec") != spec
+            or meta.get("index_snapshot") != current
+        ):
+            continue  # stale, torn or older format: NEVER an error
         # Routable dims: plain index columns, plus DERIVED dim aliases
         # (stored columns of the internal frame) as long as the alias
         # does not shadow a real index column — a shadowing alias would
@@ -1331,7 +1329,7 @@ def route_select(db, columns, where, group_by, local_tz=None):
         if not all(_agg_covered(a[0], a[1], stored) for a in aggs):
             continue
         where_expr = translate_where(where, local_tz=local_tz) if where else None
-        internal = db.spark.read.parquet(str(path))
+        internal = _read_partials(db, _path(db, name), meta)
         try:
             out = merge_partials(
                 internal, spec, gb, aggs, where_expr
@@ -1339,66 +1337,5 @@ def route_select(db, columns, where, group_by, local_tz=None):
             out.schema  # force analysis: unresolvable WHERE -> fallback
         except Exception:
             continue
-        return f"rollup:{name}", out
-
-    # built-in rollup: dims limited to eventTypeId
-    live = rollup_path(db.database_dir)
-    meta = _meta_read(live)
-    if (
-        meta is not None
-        and meta.get("format", 1) >= ROLLUP_FORMAT
-        and meta.get("index_snapshot") == current
-        and needed_dims <= {"eventTypeId"}
-        and all((a[0], a[1]) in _BUILTIN_AGG_MAP for a in aggs)
-    ):
-        frame = db.spark.read.schema(ROLLUP_SCHEMA).parquet(str(live))
-        where_expr = translate_where(where, local_tz=local_tz) if where else None
-        exprs = []
-        for op, col, alias in (a[:3] for a in aggs):
-            src, mop = _BUILTIN_AGG_MAP[(op, col)]
-            e = getattr(F, mop)(src)
-            if op == "count":  # empty-global parity with count(*)
-                e = F.coalesce(e, F.lit(0)).cast("long")
-            exprs.append(e.alias(alias))
-        try:
-            df = frame
-            if where_expr:
-                df = df.where(F.expr(where_expr))
-            out = (
-                df.groupBy(*gb).agg(*exprs) if gb else df.agg(*exprs)
-            ).select(*order)
-            out.schema
-        except Exception:
-            return None
-        return "rollup:builtin", out
+        return f"rollup:{name or 'builtin'}", out
     return None
-
-
-def rollup_read(db) -> DataFrame:
-    """The committed rollup, freshness-checked against the index manifest."""
-    from betfair_database_spark.database import _manifest_snapshot_no
-    from betfair_database_spark.exceptions import (
-        RollupMissingError,
-        StaleRollupError,
-    )
-
-    live = rollup_path(db.database_dir)
-    meta = _meta_read(live)
-    if meta is None:
-        raise RollupMissingError(db.database_dir)
-    current = _manifest_snapshot_no(db._index_path)
-    if meta.get("format", 1) < ROLLUP_FORMAT:
-        raise StaleRollupError(
-            f"rollup was written by storage format {meta.get('format', 1)} "
-            f"(< {ROLLUP_FORMAT}): untouched partitions may store 0 where "
-            "format 2 stores NULL for all-NULL sums — call create_rollup() "
-            "to rebuild (any insert()/clean() also heals it)"
-        )
-    if meta.get("index_snapshot") != current:
-        raise StaleRollupError(
-            f"rollup was built at index snapshot {meta.get('index_snapshot')} "
-            f"but the index is at snapshot {current} — a maintenance write "
-            "crashed between the index commit and the rollup swap; call "
-            "create_rollup() to rebuild"
-        )
-    return db.spark.read.schema(ROLLUP_SCHEMA).parquet(str(live))

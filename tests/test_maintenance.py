@@ -779,6 +779,28 @@ class TestWriterLock:
         lock.unlink()
         assert db.insert(src, copy=True) == EXPECTED["rows"]
 
+    def test_forced_reindex_respects_live_lock(self, env):
+        """index(force=True) removes the old index only under the writer
+        lock: against a live holder it raises and leaves the index a
+        concurrent insert() may be committing into untouched."""
+        import os
+        import socket
+
+        from betfair_database_spark.exceptions import ConcurrentWriterError
+
+        db, src, _ = env
+        assert db.insert(src, copy=True) == EXPECTED["rows"]
+        before = sorted(p for p in db._index_path.rglob("*"))
+        lock = db.database_dir / ".betfairdatabaseindex.parquet.lock"
+        lock.write_text(f"{os.getpid()} {socket.gethostname()} 0.0")
+        try:
+            with pytest.raises(ConcurrentWriterError):
+                db.index(force=True)
+        finally:
+            lock.unlink()
+        assert sorted(p for p in db._index_path.rglob("*")) == before
+        assert db.size() == EXPECTED["rows"]
+
     def test_foreign_lock_expired_heartbeat_taken_over(self, spark, env):
         """Cross-host liveness (round 9): a lock whose HEARTBEAT (mtime)
         is older than the lease is taken over even when its contents name
@@ -1256,20 +1278,26 @@ class TestMaterializedRollup:
 
         db, _ = env
         live = R.rollup_path(db.database_dir)
-        rows = db.spark.read.schema(R.ROLLUP_SCHEMA).parquet(str(live))
+        rows = db.spark.read.parquet(str(live))
         parts = sorted(
             r[0] for r in rows.select("eventTypeId").distinct().collect()
         )
         assert len(parts) >= 2
         tampered_part, touched_part = parts[0], parts[-1]
         bad = rows.withColumn(
-            "markets",
+            "_p_markets",
             F.when(
-                F.col("eventTypeId") == tampered_part, F.col("markets") + 999
-            ).otherwise(F.col("markets")),
+                F.col("eventTypeId") == tampered_part,
+                F.col("_p_markets") + 999,
+            ).otherwise(F.col("_p_markets")),
         ).localCheckpoint()
         snap = _manifest_snapshot_no(db._index_path)
-        R._atomic_swap(db, bad, snap - 2)  # stale by 2: crashed prior swap
+        R._spec_atomic_swap(  # stale by 2: crashed prior swap
+            db,
+            live,
+            bad,
+            {"index_snapshot": snap - 2, "spec": R.BUILTIN_SPEC, "name": None},
+        )
         repl = db._read_index().localCheckpoint()
         R.rollup_update(db, repl, [touched_part])
         # healed: tamper gone, stamped current, serves without raising
@@ -1281,11 +1309,11 @@ class TestMaterializedRollup:
         assert self._materialized(db) == self._recomputed(db)
 
     def test_pre_format2_rollup_refused_and_healed(self, env):
-        """Round 12 (ADVICE): a pre-round-11 rollup (no format stamp)
-        may store coalesced 0s where format 2 stores NULL for all-NULL
-        sum cells in partitions never touched since. It must never be a
-        routing candidate (the routed sum would be 0 where the scan
-        says NULL), rollup() must refuse it loudly, and the next
+        """A built-in rollup written before the built-in became a spec
+        (format 1 or 2: no spec in its meta) stores final aggregates
+        under other column names, and format 1 may store coalesced 0s
+        where NULL is right for all-NULL sum cells. It must never be a
+        routing candidate, rollup() must refuse it loudly, and the next
         maintenance op heals it with a one-time full rebuild."""
         from betfair_database_spark import rollup as R
         from betfair_database_spark.exceptions import StaleRollupError
@@ -1294,9 +1322,9 @@ class TestMaterializedRollup:
         db.create_rollup()
         mf = R.rollup_path(db.database_dir) / R._META_NAME
         orig = json.loads(mf.read_text())
-        assert orig["format"] == R.ROLLUP_FORMAT
+        assert orig["spec"] == R.BUILTIN_SPEC
         meta = dict(orig)
-        del meta["format"]  # downgrade: pretend a pre-round-11 writer
+        del meta["spec"]  # downgrade: pretend a pre-spec writer
         mf.write_text(json.dumps(meta))
         q = dict(
             columns=["eventTypeId", "count(*) AS n"],
@@ -1312,7 +1340,7 @@ class TestMaterializedRollup:
             r[0] for r in repl.select("eventTypeId").distinct().collect()
         ]
         R.rollup_update(db, repl, touched)
-        assert json.loads(mf.read_text())["format"] == R.ROLLUP_FORMAT
+        assert json.loads(mf.read_text())["spec"] == R.BUILTIN_SPEC
         db.select(**q)
         assert db.last_select_route == "rollup:builtin"
         assert self._materialized(db) == self._recomputed(db)
@@ -2050,6 +2078,7 @@ class TestRollupRouting:
         "startDay": {"rollup:byday"},
         "eventTypeId": {"rollup:byvenue", "rollup:byday", "rollup:builtin"},
         "eventCountryCode": set(),
+        "startDate": {"rollup:builtin"},
     }
     _FUZZ_AGGS = [
         # (entry, (op, col), covered-by)
@@ -2077,6 +2106,7 @@ class TestRollupRouting:
         ("marketType IN ('WIN', 'PLACE')", {"marketType"}),
         ("eventVenue IS NOT NULL", {"eventVenue"}),
         ("startDay >= '2023-08-01'", {"startDay"}),
+        ("startDate >= '2023-08-01'", {"startDate"}),
         ("marketId = '1.222000001'", {"marketId"}),
     ]
 
