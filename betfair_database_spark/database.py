@@ -142,13 +142,20 @@ class BetfairDatabase:
         (reference database.py:55-80)."""
         with self._writer_lock():
             # checked and removed under the lock: a forced reindex must
-            # never delete an index another writer is committing into
-            if self._index_path.exists():
-                if not force:
+            # never delete an index another writer is committing into.
+            # A directory without a committed manifest (a crashed index(),
+            # or a pre-v2 layout) is uncommitted garbage: cleared, rebuilt.
+            if not force:
+                try:
+                    self._committed_manifest()
+                except IndexMissingError:
+                    pass
+                else:
                     raise IndexExistsError(
                         self.database_dir,
                         " Use force=True option to reindex the database.",
                     )
+            if self._index_path.exists():
                 shutil.rmtree(self._index_path)
             frame, counters = build_index_frame(self.spark, str(self.database_dir))
             counters.rows_inserted = self._write_index(frame, str(self._index_path))
@@ -164,32 +171,14 @@ class BetfairDatabase:
         return counters.rows_inserted
 
     def _write_index(self, frame: DataFrame, path: str) -> int:
-        """Index layout for scale: hive-partitioned by eventTypeId (the most
-        selective common predicate → partition pruning) and sorted by
-        marketStartTime within partitions (parquet min/max stats → row-group
-        skipping for time-range queries). Cardinality of eventTypeId is a few
-        dozen sports, so the partition count stays sane at any corpus size.
+        """Write a fresh index at ``path`` (see _write_part_files for the
+        layout) and commit its first manifest.
 
-        Returns the number of rows written (from the manifest counts — no
-        extra count job over the index)."""
-        (
-            frame.repartition(F.col("eventTypeId"))
-            .sortWithinPartitions("marketStartTime")
-            .write.mode("overwrite")
-            # marketId is the point-lookup key (the reference's README
-            # queries select single markets); a parquet bloom filter lets
-            # a 100 TB scan skip every row group that provably lacks the
-            # id — the sort key covers RANGE predicates, blooms cover
-            # EQUALITY on the high-cardinality column the sort cannot
-            .option("parquet.bloom.filter.enabled#marketId", "true")
-            .option(
-                "parquet.bloom.filter.expected.ndv#marketId", "1000000"
-            )
-            .partitionBy("eventTypeId")
-            .parquet(path)
-        )
+        Returns the number of rows written. The per-partition counts come
+        from one groupBy job that re-reads the parquet just written."""
+        files = _write_part_files(frame, Path(path))
         # Per-partition manifest: size() and row-count checks read this JSON
-        # instead of parquet footers — O(1) at any index scale — and (v2) it
+        # instead of parquet footers — O(1) at any index scale — and it
         # lists the exact part-files of the committed snapshot, which is what
         # makes maintenance crash-atomic: readers resolve files through the
         # manifest, and the manifest replace (_manifest_write) is atomic.
@@ -201,10 +190,7 @@ class BetfairDatabase:
             .collect()
         )
         parts = {
-            _part_key(r[0]): {
-                "count": r[1],
-                "files": _list_part_files(Path(path), _part_key(r[0])),
-            }
+            _part_key(r[0]): {"count": r[1], "files": files[_part_key(r[0])]}
             for r in counts
         }
         _manifest_write(Path(path), parts)
@@ -389,9 +375,9 @@ class BetfairDatabase:
 
     def snapshots(self) -> list[dict]:
         """Committed index snapshots, oldest first: ``{"version", "rows",
-        "readable"}``. ``readable`` is False once ``vacuum()`` (or
-        maintenance under a small ``retain_snapshots``) has reaped files
-        the snapshot references."""
+        "readable", "current"}``. ``readable`` is False once ``vacuum()``
+        (or maintenance under a small ``retain_snapshots``) has reaped files
+        the snapshot references; ``current`` marks the live snapshot."""
         out = []
         current = _manifest_snapshot_no(self._index_path)
         for snap in _snapshot_versions(self._index_path):
@@ -401,7 +387,7 @@ class BetfairDatabase:
             readable = all(
                 (self._index_path / f"eventTypeId={k}" / name).exists()
                 for k, e in m.items()
-                for name in e["files"] or ()
+                for name in e["files"]
             )
             out.append(
                 {
@@ -463,14 +449,14 @@ class BetfairDatabase:
             return self._vacuum_locked(keep)
 
     def _vacuum_locked(self, keep: int) -> int:
+        live = self._committed_manifest()  # before anything is deleted
         versions = _snapshot_versions(self._index_path)
         snap_dir = self._index_path / _SNAPSHOT_DIRNAME
         for snap in versions[:-keep]:
             (snap_dir / _snapshot_name(snap)).unlink(missing_ok=True)
         protected = _retained_file_set(self._index_path, keep)
-        files_map = _manifest_files(_manifest_read(self._index_path)) or {}
-        for k, names in files_map.items():  # never reap the live snapshot
-            for name in names:
+        for k, e in live.items():  # never reap the live snapshot
+            for name in e["files"]:
                 protected.add(f"eventTypeId={k}/{name}")
         stale = [
             rel
@@ -489,14 +475,10 @@ class BetfairDatabase:
     def size(self) -> int:
         """Number of indexed entries (reference database.py:232-237).
 
-        Served from the per-partition manifest when present — no Spark job,
-        no parquet footer reads, O(1) at any index scale. Falls back to a
-        distributed count if the manifest is absent or unreadable (e.g. an
-        index written by an older version or mutated out-of-band)."""
-        manifest = _manifest_read(self._index_path)
-        if manifest is not None:
-            return sum(e["count"] for e in manifest.values())
-        return self._read_index().count()
+        Served from the committed manifest's per-partition counts — no
+        Spark job, no parquet footer reads, O(1) at any index scale.
+        Raises IndexMissingError when no manifest is committed."""
+        return sum(e["count"] for e in self._committed_manifest().values())
 
     # ------------------------------------------------------- materialized rollup
 
@@ -548,8 +530,7 @@ class BetfairDatabase:
         )
 
         with self._writer_lock():
-            if not self._index_path.exists():
-                raise IndexMissingError(self.database_dir)
+            self._committed_manifest()
             if name is None:
                 if dims or aggs:
                     raise ValueError("dims/aggs require a rollup name")
@@ -703,7 +684,9 @@ class BetfairDatabase:
         from betfair_database_spark.inserts import insert_markets
 
         with self._writer_lock():
-            if not self._index_path.exists():
+            try:
+                self._committed_manifest()
+            except IndexMissingError:
                 self.index()
             return insert_markets(
                 self,
@@ -717,20 +700,30 @@ class BetfairDatabase:
 
     # --------------------------------------------------------------- internal
 
-    def _read_index(self, version: int | None = None) -> DataFrame:
-        if not self._index_path.exists():
+    def _committed_manifest(self) -> dict[str, dict]:
+        """The committed manifest — the one definition of "an index
+        exists". Raises IndexMissingError when none is committed: no index
+        directory, an index() that died before its commit, or a pre-v2
+        layout. Such a directory is uncommitted garbage that index()
+        clears and rebuilds. An empty manifest (0 markets) is an index."""
+        manifest = _manifest_read(self._index_path)
+        if manifest is None:
             raise IndexMissingError(self.database_dir)
+        return manifest
+
+    def _read_index(self, version: int | None = None) -> DataFrame:
+        manifest = self._committed_manifest()
         if version is not None:
-            snap = _snapshot_read(self._index_path, version)
-            if snap is None:
+            manifest = _snapshot_read(self._index_path, version)
+            if manifest is None:
                 raise ValueError(
                     f"unknown index snapshot version {version}; "
                     f"available: {_snapshot_versions(self._index_path)}"
                 )
             missing = [
                 f"eventTypeId={k}/{name}"
-                for k, e in snap.items()
-                for name in e["files"] or ()
+                for k, e in manifest.items()
+                for name in e["files"]
                 if not (self._index_path / f"eventTypeId={k}" / name).exists()
             ]
             if missing:
@@ -739,30 +732,22 @@ class BetfairDatabase:
                     f"{len(missing)} of its part-files were vacuumed "
                     "(maintain with retain_snapshots > 1 to keep history)"
                 )
-            files = {k: e["files"] for k, e in snap.items()}
+        # Snapshot read: exactly the part-files the committed manifest
+        # lists — uncommitted files from an in-flight (or crashed)
+        # maintenance write are invisible, so a reader sees either the
+        # old snapshot or the new one, never a mix.
+        paths = [
+            str(self._index_path / f"eventTypeId={k}" / name)
+            for k, e in manifest.items()
+            for name in e["files"]
+        ]
+        if not paths:
+            df = self.spark.createDataFrame([], _index_schema())
         else:
-            files = _manifest_files(_manifest_read(self._index_path))
-        if files is not None:
-            # Snapshot read: exactly the part-files the committed manifest
-            # lists — uncommitted files from an in-flight (or crashed)
-            # maintenance write are invisible, so a reader sees either the
-            # old snapshot or the new one, never a mix.
-            paths = [
-                str(self._index_path / f"eventTypeId={k}" / name)
-                for k, names in files.items()
-                for name in names
-            ]
-            if not paths:
-                df = self.spark.createDataFrame([], _index_schema())
-            else:
-                df = (
-                    self.spark.read.schema(_index_schema())
-                    .option("basePath", str(self._index_path))
-                    .parquet(*paths)
-                )
-        else:  # legacy (v1/no manifest) index: directory listing
-            df = self.spark.read.schema(_index_schema()).parquet(
-                str(self._index_path)
+            df = (
+                self.spark.read.schema(_index_schema())
+                .option("basePath", str(self._index_path))
+                .parquet(*paths)
             )
         return df.select(*SQL_TABLE_COLUMNS)  # contract order, partition col included
 
@@ -791,17 +776,13 @@ class BetfairDatabase:
         collecting the touched list is O(sports), never O(rows)."""
         if not touched:
             return
+        manifest = self._committed_manifest()
         # Materialize first: the replacement lineage reads the very parquet
         # files the swap below retires.
         repl = materialize(
             replacement.where(self._partition_filter(touched)),
             "upsert-replacement",
         )
-        manifest = _manifest_read(self._index_path)
-        files_map = _manifest_files(manifest)
-        if files_map is None:
-            self._upsert_partitions_legacy(repl, touched)
-            return
         # Crash-atomic commit protocol (round 6). Readers resolve part-files
         # through the manifest (_read_index), and the manifest swap is an
         # atomic rename — so a crash at ANY point leaves every reader on a
@@ -825,50 +806,23 @@ class BetfairDatabase:
             rel
             for key in _list_partition_keys(self._index_path)
             for name in _list_part_files(self._index_path, key)
-            if name not in set(files_map.get(key, ()))
+            if name not in manifest.get(key, {}).get("files", ())
             and (rel := f"eventTypeId={key}/{name}") not in protected
         )
         # 1. Write the replacement rows ALONGSIDE the live files (append
-        #    never deletes); Spark's UUID part names cannot collide. Record
-        #    what exists first — "just written" must be computed against
-        #    EVERYTHING on disk (live + retained-snapshot files), not just
-        #    the live manifest, or a retained older snapshot's files would
-        #    be adopted into the new manifest as if freshly written.
-        pre_existing = {
-            key: set(_list_part_files(self._index_path, key))
-            for key in touched_keys
-        }
-        (
-            repl.repartition(F.col("eventTypeId"))
-            .sortWithinPartitions("marketStartTime")
-            .write.mode("append")
-            # same bloom filters as _write_index: appended part-files
-            # must prune point lookups like the originals
-            .option("parquet.bloom.filter.enabled#marketId", "true")
-            .option(
-                "parquet.bloom.filter.expected.ndv#marketId", "1000000"
-            )
-            .partitionBy("eventTypeId")
-            .parquet(str(self._index_path))
-        )
+        #    never deletes); Spark's UUID part names cannot collide.
+        written = _write_part_files(repl, self._index_path)
         counts = {
             _part_key(r[0]): r[1]
             for r in repl.groupBy("eventTypeId").count().collect()
         }
-        # 2. The just-written files are exactly the on-disk files that were
-        #    not there before the append.
+        # 2. The new snapshot: untouched partitions as committed, touched
+        #    ones exactly as just written (empty ones drop out).
         new_manifest = {
             k: e for k, e in manifest.items() if k not in touched_keys
         }
         for key, n in counts.items():
-            new_manifest[key] = {
-                "count": n,
-                "files": [
-                    name
-                    for name in _list_part_files(self._index_path, key)
-                    if name not in pre_existing.get(key, set())
-                ],
-            }
+            new_manifest[key] = {"count": n, "files": written[key]}
         # 3. COMMIT: atomic manifest replace.
         _manifest_write(self._index_path, new_manifest)
         # 4. Reap the replaced snapshot's files and emptied partition dirs —
@@ -876,8 +830,8 @@ class BetfairDatabase:
         protected = _retained_file_set(self._index_path, self.retain_snapshots)
         self._reap_files(
             rel
-            for k in touched_keys & set(files_map)
-            for name in files_map[k]
+            for k in touched_keys & set(manifest)
+            for name in manifest[k]["files"]
             if (rel := f"eventTypeId={k}/{name}") not in protected
         )
         for k in touched_keys - set(counts):
@@ -906,65 +860,6 @@ class BetfairDatabase:
             p.unlink(missing_ok=True)
             crc = p.parent / ("." + p.name + ".crc")
             crc.unlink(missing_ok=True)
-
-    def _upsert_partitions_legacy(
-        self, repl: DataFrame, touched: list[str | None]
-    ) -> None:
-        """Pre-v2 index (no file-list manifest): dynamic partition overwrite.
-        Not crash-atomic — kept only so an index written by an older version
-        stays maintainable; this pass upgrades its manifest to v2, so every
-        later upsert takes the commit protocol."""
-        old = _manifest_read(self._index_path)
-        # Drop the count manifest BEFORE mutating parquet: a crash mid-swap
-        # then makes size() fall back to the distributed count instead of
-        # silently serving pre-write numbers.
-        (self._index_path / _MANIFEST_NAME).unlink(missing_ok=True)
-        (
-            repl.repartition(F.col("eventTypeId"))
-            .sortWithinPartitions("marketStartTime")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("eventTypeId")
-            .parquet(str(self._index_path))
-        )
-        counts = {r[0]: r[1] for r in repl.groupBy("eventTypeId").count().collect()}
-        # Dynamic overwrite only replaces partitions present in the written
-        # data; a touched partition whose rows are ALL gone must be removed
-        # explicitly.
-        for v in set(touched) - set(counts):
-            gone = self._index_path / f"eventTypeId={_part_key(v)}"
-            if gone.exists():
-                shutil.rmtree(gone)
-        from betfair_database_spark.rollup import (
-            rollup_update,
-            spec_rollup_update,
-        )
-
-        if old is None:  # no base counts → a partial manifest would lie
-            rollup_update(self, repl, touched)
-            spec_rollup_update(self, repl, touched)
-            return
-        merged = {k: e["count"] for k, e in old.items()}
-        for v in touched:
-            merged.pop(_part_key(v), None)
-        for v, n in counts.items():
-            merged[_part_key(v)] = n
-        _manifest_write(
-            self._index_path,
-            {
-                k: {
-                    "count": n,
-                    "files": _list_part_files(self._index_path, k),
-                }
-                for k, n in merged.items()
-            },
-        )
-        # Rollup maintenance strictly AFTER the manifest commit (mirrors
-        # _upsert_partitions): the manifest was unlinked at the top of this
-        # method, so calling earlier would stamp the rollup with snapshot 0
-        # and the real commit below it would immediately read as stale.
-        rollup_update(self, repl, touched)
-        spec_rollup_update(self, repl, touched)
 
 
 def _qsketch_scan_sql(
@@ -1479,6 +1374,52 @@ def _lock_is_stale(holder: str) -> bool:
     return False
 
 
+def _write_part_files(frame: DataFrame, index_path: Path) -> dict[str, list[str]]:
+    """The one index part-file writer, for index() and maintenance alike.
+    Appends ``frame`` beside whatever is on disk (it never deletes; the
+    manifest commit decides what is live) and returns partition key → the
+    names of the part-files this write added.
+
+    Layout for scale: hive-partitioned by eventTypeId (the most selective
+    common predicate → partition pruning) and sorted by marketStartTime
+    within partitions (parquet min/max stats → row-group skipping for
+    time-range queries). Cardinality of eventTypeId is a few dozen sports,
+    so the partition count stays sane at any corpus size.
+
+    "Added" is computed against EVERYTHING on disk (live + retained-
+    snapshot + uncommitted files), not just the live manifest, or a
+    retained older snapshot's files would be adopted into the new
+    manifest as if freshly written; Spark's UUID part names cannot
+    collide."""
+    before = {
+        key: set(_list_part_files(index_path, key))
+        for key in _list_partition_keys(index_path)
+    }
+    (
+        frame.repartition(F.col("eventTypeId"))
+        .sortWithinPartitions("marketStartTime")
+        .write.mode("append")
+        # marketId is the point-lookup key (the reference's README
+        # queries select single markets); a parquet bloom filter lets
+        # a 100 TB scan skip every row group that provably lacks the
+        # id — the sort key covers RANGE predicates, blooms cover
+        # EQUALITY on the high-cardinality column the sort cannot
+        .option("parquet.bloom.filter.enabled#marketId", "true")
+        .option(
+            "parquet.bloom.filter.expected.ndv#marketId", "1000000"
+        )
+        .partitionBy("eventTypeId")
+        .parquet(str(index_path))
+    )
+    added = {}
+    for key in _list_partition_keys(index_path):
+        old = before.get(key, set())
+        names = [n for n in _list_part_files(index_path, key) if n not in old]
+        if names:
+            added[key] = names
+    return added
+
+
 def _manifest_write(index_path: Path, partitions: dict[str, dict]) -> int:
     """Atomically replace the manifest (write temp + rename): this IS the
     commit point of the maintenance protocol. ``partitions`` maps partition
@@ -1508,7 +1449,8 @@ def _snapshot_name(snap: int) -> str:
 
 
 def _manifest_snapshot_no(index_path: Path) -> int:
-    """Snapshot number of the committed manifest (0 when absent/legacy)."""
+    """Snapshot number of the committed manifest; 0 when none is
+    committed (absent, unreadable or pre-v2), so the first commit is 1."""
     p = index_path / _MANIFEST_NAME
     try:
         data = json.loads(p.read_text())
@@ -1537,15 +1479,10 @@ def _snapshot_versions(index_path: Path) -> list[int]:
 
 
 def _snapshot_read(index_path: Path, snap: int) -> dict[str, dict] | None:
-    p = index_path / _SNAPSHOT_DIRNAME / _snapshot_name(snap)
-    try:
-        data = json.loads(p.read_text())
-        return {
-            str(k): {"count": int(e["count"]), "files": list(e["files"])}
-            for k, e in data["partitions"].items()
-        }
-    except (OSError, ValueError, TypeError, KeyError):
-        return None
+    """A retained snapshot's manifest copy, read like _manifest_read."""
+    return _read_manifest_file(
+        index_path / _SNAPSHOT_DIRNAME / _snapshot_name(snap)
+    )
 
 
 def _retained_file_set(index_path: Path, keep: int) -> set[str]:
@@ -1557,36 +1494,29 @@ def _retained_file_set(index_path: Path, keep: int) -> set[str]:
         if m is None:
             continue
         for k, e in m.items():
-            for name in e["files"] or ():
+            for name in e["files"]:
                 protected.add(f"eventTypeId={k}/{name}")
     return protected
 
 
 def _manifest_read(index_path: Path) -> dict[str, dict] | None:
-    """Normalized manifest: partition key → ``{"count": int, "files":
-    [names] | None}``. A v1 manifest (bare counts, pre-round-6) reads with
-    ``files=None`` — counts still served, snapshot reads unavailable."""
-    p = index_path / _MANIFEST_NAME
-    if not p.exists():
-        return None
+    """The committed manifest: partition key → ``{"count": int, "files":
+    [names]}``. None when no v2 manifest is committed — absent,
+    unreadable, or a pre-v2 one (bare counts, no file list)."""
+    return _read_manifest_file(index_path / _MANIFEST_NAME)
+
+
+def _read_manifest_file(p: Path) -> dict[str, dict] | None:
     try:
         data = json.loads(p.read_text())
-        if isinstance(data, dict) and data.get("version") == 2:
-            return {
-                str(k): {"count": int(e["count"]), "files": list(e["files"])}
-                for k, e in data["partitions"].items()
-            }
-        return {str(k): {"count": int(v), "files": None} for k, v in data.items()}
-    except (ValueError, TypeError, KeyError, OSError):
+        if data["version"] != 2:
+            return None
+        return {
+            str(k): {"count": int(e["count"]), "files": list(e["files"])}
+            for k, e in data["partitions"].items()
+        }
+    except (OSError, ValueError, TypeError, KeyError):
         return None
-
-
-def _manifest_files(manifest: dict[str, dict] | None) -> dict[str, list] | None:
-    """Partition key → part-file names, or None when the manifest cannot
-    serve snapshot reads (absent, unreadable, or v1)."""
-    if manifest is None or any(e["files"] is None for e in manifest.values()):
-        return None
-    return {k: e["files"] for k, e in manifest.items()}
 
 
 def _list_part_files(index_path: Path, key: str) -> list[str]:

@@ -185,13 +185,6 @@ def insert_markets(
         "insert-decided",
     )
 
-    import os as _os
-
-    if _os.environ.get("BFDB_DEBUG_INSERT"):
-        decided.select(
-            "marketId", "meta_exists", "data_exists", "rows_equal", "sql_action", "dest_meta"
-        ).show(50, truncate=False)
-
     n_update = decided.where(F.col("sql_action") == "UPDATE").count()
     n_insert = decided.where(F.col("sql_action") == "INSERT").count()
     n_skip = decided.where(F.col("sql_action") == "SKIP").count()

@@ -127,26 +127,36 @@ def test_bulk_duplicate_market_id_last_entry_wins(indexed_db):
     assert rows[0]["eventTypeName"] == "Soccer"
 
 
-def test_index_parquet_has_marketid_bloom_filters(indexed_db):
+def test_index_parquet_has_marketid_bloom_filters(indexed_db, fresh_corpus, tmp_path):
     """Round 7: the index writer enables parquet bloom filters on
     marketId — the point-lookup key the sort order (marketStartTime)
-    cannot prune. Assert the footers actually carry bloom offsets."""
+    cannot prune. Assert EVERY part-file footer carries a bloom offset,
+    both for the files index() wrote and for the files insert() appends
+    (an insert into an empty database writes all of its part-files)."""
     from pathlib import Path
 
-    files = list(
-        Path(indexed_db._index_path).glob("eventTypeId=*/*.parquet")
-    )
-    assert files
+    from betfair_database_spark.database import BetfairDatabase
+
+    target = tmp_path / "inserted"
+    target.mkdir()
+    inserted_db = BetfairDatabase(target, spark=indexed_db.spark)
+    assert inserted_db.insert(fresh_corpus, copy=True) == EXPECTED["rows"]
+
+    written = [
+        list(Path(db._index_path).glob("eventTypeId=*/*.parquet"))
+        for db in (indexed_db, inserted_db)
+    ]
+    assert all(written)
     spark = indexed_db.spark
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
-    found = False
-    for f in files:
+    for f in written[0] + written[1]:
         hpath = jvm.org.apache.hadoop.fs.Path(str(f))
         infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
             hpath, conf
         )
         reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
+        found = False
         try:
             blocks = reader.getFooter().getBlocks()
             for bi in range(blocks.size()):
@@ -160,4 +170,4 @@ def test_index_parquet_has_marketid_bloom_filters(indexed_db):
                         found = True
         finally:
             reader.close()
-    assert found, "no bloom filter offsets recorded for marketId"
+        assert found, f"no bloom filter offset for marketId in {f}"

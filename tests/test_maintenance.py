@@ -237,9 +237,18 @@ class TestPartitionScopedMaintenance:
             assert db.size() == EXPECTED["rows"]
         finally:
             db.spark = real_spark
-        # Manifest removed -> falls back to a distributed count, same answer.
+        # Manifest removed -> no committed index: size() and vacuum() raise,
+        # and vacuum() reaps none of the now-uncommitted part-files.
+        from betfair_database_spark.exceptions import IndexMissingError
+
+        parts = sorted(db._index_path.rglob("*.parquet"))
+        assert parts
         (db._index_path / "_manifest.json").unlink()
-        assert db.size() == EXPECTED["rows"]
+        with pytest.raises(IndexMissingError):
+            db.size()
+        with pytest.raises(IndexMissingError):
+            db.vacuum()
+        assert sorted(db._index_path.rglob("*.parquet")) == parts
 
 
 def test_export_multipart_matches_single_file(mutable_db, tmp_path):
@@ -396,13 +405,39 @@ class TestCrashAtomicMaintenance:
         assert db.insert(src3, copy=True) == 1
         from betfair_database_spark.database import (
             _list_part_files,
-            _manifest_files,
             _manifest_read,
         )
 
-        files = _manifest_files(_manifest_read(db._index_path))
-        for key, names in files.items():
-            assert sorted(names) == _list_part_files(db._index_path, key)
+        for key, e in _manifest_read(db._index_path).items():
+            assert sorted(e["files"]) == _list_part_files(db._index_path, key)
+
+    def test_crashed_index_is_uncommitted_and_rebuilt(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """index() that dies between its parquet write and its manifest
+        commit leaves no index: readers refuse the uncommitted part-files,
+        and a plain index() clears them and rebuilds."""
+        import betfair_database_spark.database as dbmod
+        from betfair_database_spark.exceptions import IndexMissingError
+
+        root = tmp_path / "cidb"
+        build_corpus(root)
+        db = dbmod.BetfairDatabase(root, spark=spark)
+
+        def boom(*a, **k):
+            raise RuntimeError("injected crash before manifest commit")
+
+        monkeypatch.setattr(dbmod, "_manifest_write", boom)
+        with pytest.raises(RuntimeError, match="injected"):
+            db.index()
+        monkeypatch.undo()
+        assert any(db._index_path.rglob("*.parquet"))  # written, uncommitted
+        with pytest.raises(IndexMissingError):
+            db.select(["marketId"])
+        with pytest.raises(IndexMissingError):
+            db.size()
+        assert db.index() == EXPECTED["rows"]
+        assert db.size() == EXPECTED["rows"]
 
 
 class TestTimeTravel:
@@ -497,13 +532,11 @@ class TestTimeTravel:
         # and the on-disk file set is exactly the live manifest again
         from betfair_database_spark.database import (
             _list_part_files,
-            _manifest_files,
             _manifest_read,
         )
 
-        files = _manifest_files(_manifest_read(db._index_path))
-        for key, names in files.items():
-            assert sorted(names) == _list_part_files(db._index_path, key)
+        for key, e in _manifest_read(db._index_path).items():
+            assert sorted(e["files"]) == _list_part_files(db._index_path, key)
 
     def test_default_retention_keeps_current_behavior(self, spark, tmp_path):
         """retain_snapshots=1 (default): maintenance immediately reaps
@@ -512,7 +545,6 @@ class TestTimeTravel:
         from betfair_database_spark.database import (
             BetfairDatabase,
             _list_part_files,
-            _manifest_files,
             _manifest_read,
         )
 
@@ -527,9 +559,8 @@ class TestTimeTravel:
         )[0]["marketDataFilePath"]
         Path(gone_path).unlink()
         db.clean()
-        files = _manifest_files(_manifest_read(db._index_path))
-        for key, names in files.items():
-            assert sorted(names) == _list_part_files(db._index_path, key)
+        for key, e in _manifest_read(db._index_path).items():
+            assert sorted(e["files"]) == _list_part_files(db._index_path, key)
         # history metadata still lists every version; under
         # retain_snapshots=1 no pruned non-empty snapshot stays readable
         vs = db.snapshots()
