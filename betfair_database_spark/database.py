@@ -25,7 +25,6 @@ from betfair_database_spark.const import (
     INDEX_DIRNAME,
     MARKET_METADATA_FILE_PATH,
     SQL_TABLE_COLUMNS,
-    SQL_TABLE_NAME,
     DuplicatePolicy,
 )
 from betfair_database_spark.etl import Counters, build_index_frame
@@ -158,7 +157,12 @@ class BetfairDatabase:
             if self._index_path.exists():
                 shutil.rmtree(self._index_path)
             frame, counters = build_index_frame(self.spark, str(self.database_dir))
-            counters.rows_inserted = self._write_index(frame, str(self._index_path))
+            # The manifest lists the committed part-files and their counts:
+            # readers resolve files through it, size() sums its counts, and
+            # its atomic replace is the commit point.
+            parts = _write_part_files(frame, self._index_path)
+            _manifest_write(self._index_path, parts)
+            counters.rows_inserted = sum(e["count"] for e in parts.values())
             from betfair_database_spark.rollup import (
                 rollup_specs,
                 spec_rollup_build,
@@ -169,32 +173,6 @@ class BetfairDatabase:
                 spec_rollup_build(self, name, spec)
         self.last_counters = counters
         return counters.rows_inserted
-
-    def _write_index(self, frame: DataFrame, path: str) -> int:
-        """Write a fresh index at ``path`` (see _write_part_files for the
-        layout) and commit its first manifest.
-
-        Returns the number of rows written. The per-partition counts come
-        from one groupBy job that re-reads the parquet just written."""
-        files = _write_part_files(frame, Path(path))
-        # Per-partition manifest: size() and row-count checks read this JSON
-        # instead of parquet footers — O(1) at any index scale — and it
-        # lists the exact part-files of the committed snapshot, which is what
-        # makes maintenance crash-atomic: readers resolve files through the
-        # manifest, and the manifest replace (_manifest_write) is atomic.
-        counts = (
-            self.spark.read.schema(_index_schema())
-            .parquet(path)
-            .groupBy("eventTypeId")
-            .count()
-            .collect()
-        )
-        parts = {
-            _part_key(r[0]): {"count": r[1], "files": files[_part_key(r[0])]}
-            for r in counts
-        }
-        _manifest_write(Path(path), parts)
-        return sum(r[1] for r in counts)
 
     # ------------------------------------------------------------------ query
 
@@ -259,11 +237,13 @@ class BetfairDatabase:
                 out = routed[1]
                 return out.limit(limit) if limit is not None else out
         df = self._read_index(version=version)
-        df.createOrReplaceTempView(SQL_TABLE_NAME)
         register_sqlite_functions(self.spark)
         col_list = list(columns) if columns else list(SQL_TABLE_COLUMNS)
         gb_list = list(group_by) if group_by else []
-        from_clause = SQL_TABLE_NAME
+        # Bound per call, not as a session-global view that a select on
+        # another database could replace. Keyword binding formats the SQL
+        # text, so braces in user or spec text are doubled (_braces).
+        from_clause = "{index}"
         # scan fallback for derived-dim rollup queries: project the
         # persisted spec's expression as the alias in a subquery, so the
         # same query text — SELECT, GROUP BY, and (round 11) WHERE, the
@@ -290,7 +270,7 @@ class BetfairDatabase:
                 proj = ", ".join(
                     f"({e}) AS {a}" for a, e in sorted(derived.items())
                 )
-                from_clause = f"(SELECT *, {proj} FROM {SQL_TABLE_NAME})"
+                from_clause = f"(SELECT *, {_braces(proj)} FROM {{index}})"
         # aggregate-entry rewrite applies to BARE aggregates too
         # (group_by=None): routed and scan answers must come from the
         # same estimator/division regardless of grouping shape
@@ -321,28 +301,29 @@ class BetfairDatabase:
             hist_params = hist_params_for(self, pctl_cols)
         from betfair_database_spark.rollup import _PCTL2_COL_RE
 
+        where_sql = (
+            _braces(translate_where(where, local_tz=local_tz)) if where else None
+        )
+        gb_sql = [_braces(g) for g in gb_list]
         if any(_PCTL2_COL_RE.match(c) for c in col_list):
             # log-linear-sketch quantile (round 13): needs the two-level
             # scan twin — per-(group, okey) counts cannot be built in a
             # flat aggregate. Parameter-free (no declared range), so no
-            # spec resolution step; the sketch IS the definition.
-            where_sql = (
-                translate_where(where, local_tz=local_tz) if where else None
+            # spec resolution step; the sketch IS the definition. Its
+            # column entries are plain identifiers (brace-free).
+            sql = _qsketch_scan_sql(col_list, gb_sql, from_clause, where_sql)
+        else:
+            cols = ",".join(
+                _braces(_scan_agg_sql(c, hist_params)) for c in col_list
             )
-            sql = _qsketch_scan_sql(col_list, gb_list, from_clause, where_sql)
-            if limit is not None:
-                sql += f" LIMIT {limit}"
-            return self.spark.sql(sql)
-        col_list = [_scan_agg_sql(c, hist_params) for c in col_list]
-        cols = ",".join(col_list)
-        sql = f"SELECT {cols} FROM {from_clause}"
-        if where:
-            sql += f" WHERE {translate_where(where, local_tz=local_tz)}"
-        if gb_list:
-            sql += " GROUP BY " + ",".join(gb_list)
+            sql = f"SELECT {cols} FROM {from_clause}"
+            if where_sql:
+                sql += f" WHERE {where_sql}"
+            if gb_sql:
+                sql += " GROUP BY " + ",".join(gb_sql)
         if limit is not None:
             sql += f" LIMIT {limit}"
-        return self.spark.sql(sql)
+        return self.spark.sql(sql, index=df)
 
     def select(
         self,
@@ -643,7 +624,9 @@ class BetfairDatabase:
         # plan, so the parquet swap below can't invalidate lazy reads and no
         # identical-plan cache aliasing survives across calls.
         index = materialize(self._read_index(), "clean-index-snapshot")
-        total = index.count()
+        # _read_index reads exactly the files the committed manifest
+        # lists, so its counts are the snapshot's row count: no count job.
+        total = self.size()
         base = str(self.database_dir.resolve())
 
         from betfair_database_spark.sources.discovery import list_files
@@ -810,19 +793,17 @@ class BetfairDatabase:
             and (rel := f"eventTypeId={key}/{name}") not in protected
         )
         # 1. Write the replacement rows ALONGSIDE the live files (append
-        #    never deletes); Spark's UUID part names cannot collide.
+        #    never deletes); Spark's UUID part names cannot collide. The
+        #    writer returns the manifest entries of what it wrote, counts
+        #    from the new files' footers — no Spark job re-counts them.
         written = _write_part_files(repl, self._index_path)
-        counts = {
-            _part_key(r[0]): r[1]
-            for r in repl.groupBy("eventTypeId").count().collect()
-        }
         # 2. The new snapshot: untouched partitions as committed, touched
-        #    ones exactly as just written (empty ones drop out).
+        #    ones exactly as just written. A touched partition the write
+        #    left no rows in is absent from ``written``: it drops out.
         new_manifest = {
             k: e for k, e in manifest.items() if k not in touched_keys
         }
-        for key, n in counts.items():
-            new_manifest[key] = {"count": n, "files": written[key]}
+        new_manifest.update(written)
         # 3. COMMIT: atomic manifest replace.
         _manifest_write(self._index_path, new_manifest)
         # 4. Reap the replaced snapshot's files and emptied partition dirs —
@@ -834,7 +815,7 @@ class BetfairDatabase:
             for name in manifest[k]["files"]
             if (rel := f"eventTypeId={k}/{name}") not in protected
         )
-        for k in touched_keys - set(counts):
+        for k in touched_keys - set(written):
             gone = self._index_path / f"eventTypeId={k}"
             if gone.exists() and not any(gone.glob("*.parquet")):
                 shutil.rmtree(gone)
@@ -860,6 +841,12 @@ class BetfairDatabase:
             p.unlink(missing_ok=True)
             crc = p.parent / ("." + p.name + ".crc")
             crc.unlink(missing_ok=True)
+
+
+def _braces(text: str) -> str:
+    """``text`` escaped for keyword-bound spark.sql, which formats the
+    query like str.format."""
+    return text.replace("{", "{{").replace("}", "}}")
 
 
 def _qsketch_scan_sql(
@@ -1374,11 +1361,15 @@ def _lock_is_stale(holder: str) -> bool:
     return False
 
 
-def _write_part_files(frame: DataFrame, index_path: Path) -> dict[str, list[str]]:
+def _write_part_files(frame: DataFrame, index_path: Path) -> dict[str, dict]:
     """The one index part-file writer, for index() and maintenance alike.
     Appends ``frame`` beside whatever is on disk (it never deletes; the
-    manifest commit decides what is live) and returns partition key → the
-    names of the part-files this write added.
+    manifest commit decides what is live) and returns the manifest
+    entries of what it wrote: partition key → ``{"count": rows, "files":
+    [names of the part-files this write added]}``. The count is the sum
+    of those files' parquet footer row counts — a driver-side read of
+    the bytes just written, no Spark job — so a manifest's counts and
+    file lists always describe the same files.
 
     Layout for scale: hive-partitioned by eventTypeId (the most selective
     common predicate → partition pruning) and sorted by marketStartTime
@@ -1391,6 +1382,8 @@ def _write_part_files(frame: DataFrame, index_path: Path) -> dict[str, list[str]
     retained older snapshot's files would be adopted into the new
     manifest as if freshly written; Spark's UUID part names cannot
     collide."""
+    import pyarrow.parquet as pq
+
     before = {
         key: set(_list_part_files(index_path, key))
         for key in _list_partition_keys(index_path)
@@ -1416,7 +1409,11 @@ def _write_part_files(frame: DataFrame, index_path: Path) -> dict[str, list[str]
         old = before.get(key, set())
         names = [n for n in _list_part_files(index_path, key) if n not in old]
         if names:
-            added[key] = names
+            rows = sum(
+                pq.read_metadata(index_path / f"eventTypeId={key}" / n).num_rows
+                for n in names
+            )
+            added[key] = {"count": rows, "files": names}
     return added
 
 

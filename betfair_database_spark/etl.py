@@ -14,7 +14,7 @@ codec (no Spark codec exists for zip).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,7 +54,6 @@ class Counters:
     rows_inserted: int = 0
     markets_updated: int = 0
     markets_skipped: int = 0
-    extra: dict = field(default_factory=dict)
 
     @property
     def markets_added(self) -> int:
@@ -71,9 +70,7 @@ class Counters:
 
 
 def build_index_frame(
-    spark: SparkSession,
-    source_dir: str,
-    write_derived_files: bool = True,
+    spark: SparkSession, source_dir: str
 ) -> tuple[DataFrame, Counters]:
     """Build the 37-column index frame for every market under source_dir.
 
@@ -160,7 +157,7 @@ def build_index_frame(
             F.col("data_path").alias("marketDataFilePath"),
         )
     )
-    if write_derived_files and has_orphans:
+    if has_orphans:
         write_derived_metadata_files(
             derived.select(
                 F.col("marketMetadataFilePath").alias("json_path"),

@@ -185,12 +185,10 @@ def insert_markets(
         "insert-decided",
     )
 
-    n_update = decided.where(F.col("sql_action") == "UPDATE").count()
-    n_insert = decided.where(F.col("sql_action") == "INSERT").count()
-    n_skip = decided.where(F.col("sql_action") == "SKIP").count()
-    counters.markets_updated = n_update
-    counters.markets_skipped = n_skip
-    counters.rows_inserted = n_insert + n_update
+    n = dict(decided.groupBy("sql_action").count().collect())
+    counters.markets_updated = n.get("UPDATE", 0)
+    counters.markets_skipped = n.get("SKIP", 0)
+    counters.rows_inserted = n.get("INSERT", 0) + counters.markets_updated
     db.last_counters = counters
 
     # --- filesystem mutation (executor-side) ----------------------------------

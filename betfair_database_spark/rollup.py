@@ -817,14 +817,17 @@ def _path(db, name: str | None) -> Path:
 
 def _spec_atomic_swap(db, path: Path, frame: DataFrame, meta: dict) -> int:
     """Write ``frame`` + meta to a sibling temp dir, then replace the live
-    rollup. A rollup is group-cardinality-sized, so one part-file. The
+    rollup. A rollup is group-cardinality-sized, so one part-file; its
+    row count comes from that file's parquet footer, not a re-read. The
     meta records the frame's schema for ``_read_partials``."""
+    import pyarrow.parquet as pq
+
     tmp = path.with_suffix(".swap")
     if tmp.exists():
         shutil.rmtree(tmp)
     schema = frame.schema
     frame.coalesce(1).write.mode("overwrite").parquet(str(tmp))
-    n = db.spark.read.schema(schema).parquet(str(tmp)).count()
+    n = sum(pq.read_metadata(f).num_rows for f in tmp.glob("*.parquet"))
     (tmp / _META_NAME).write_text(
         json.dumps({**meta, "rows": n, "schema": schema.jsonValue()})
     )

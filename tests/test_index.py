@@ -131,43 +131,64 @@ def test_index_parquet_has_marketid_bloom_filters(indexed_db, fresh_corpus, tmp_
     """Round 7: the index writer enables parquet bloom filters on
     marketId — the point-lookup key the sort order (marketStartTime)
     cannot prune. Assert EVERY part-file footer carries a bloom offset,
-    both for the files index() wrote and for the files insert() appends
-    (an insert into an empty database writes all of its part-files)."""
+    for the files index() wrote, the files insert() appends (an insert
+    into an empty database writes all of its part-files) and the files
+    clean() rewrites. The same footers pin the manifest invariant: each
+    committed partition's count is the sum of its listed files' row
+    counts, and the listed files are exactly the part-files on disk."""
     from pathlib import Path
 
-    from betfair_database_spark.database import BetfairDatabase
+    from betfair_database_spark.database import BetfairDatabase, _manifest_read
+    from tests.corpus import build_corpus
 
     target = tmp_path / "inserted"
     target.mkdir()
     inserted_db = BetfairDatabase(target, spark=indexed_db.spark)
     assert inserted_db.insert(fresh_corpus, copy=True) == EXPECTED["rows"]
 
-    written = [
-        list(Path(db._index_path).glob("eventTypeId=*/*.parquet"))
-        for db in (indexed_db, inserted_db)
-    ]
-    assert all(written)
+    cleaned_root = tmp_path / "cleaned"
+    build_corpus(cleaned_root)
+    cleaned_db = BetfairDatabase(cleaned_root, spark=indexed_db.spark)
+    cleaned_db.index()
+    (cleaned_root / "1.222000001").unlink()
+    assert cleaned_db.clean() == 1
+
     spark = indexed_db.spark
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
-    for f in written[0] + written[1]:
-        hpath = jvm.org.apache.hadoop.fs.Path(str(f))
-        infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            hpath, conf
-        )
-        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
-        found = False
-        try:
-            blocks = reader.getFooter().getBlocks()
-            for bi in range(blocks.size()):
-                cols = blocks.get(bi).getColumns()
-                for ci in range(cols.size()):
-                    col = cols.get(ci)
-                    if (
-                        col.getPath().toDotString() == "marketId"
-                        and col.getBloomFilterOffset() > 0
-                    ):
-                        found = True
-        finally:
-            reader.close()
-        assert found, f"no bloom filter offset for marketId in {f}"
+    for db in (indexed_db, inserted_db, cleaned_db):
+        index_path = Path(db._index_path)
+        manifest = _manifest_read(index_path)
+        listed = {
+            index_path / f"eventTypeId={k}" / name
+            for k, e in manifest.items()
+            for name in e["files"]
+        }
+        assert listed and listed == set(index_path.glob("eventTypeId=*/*.parquet"))
+        for key, entry in manifest.items():
+            rows = 0
+            for name in entry["files"]:
+                f = index_path / f"eventTypeId={key}" / name
+                hpath = jvm.org.apache.hadoop.fs.Path(str(f))
+                infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                    hpath, conf
+                )
+                reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
+                found = False
+                try:
+                    blocks = reader.getFooter().getBlocks()
+                    for bi in range(blocks.size()):
+                        rows += blocks.get(bi).getRowCount()
+                        cols = blocks.get(bi).getColumns()
+                        for ci in range(cols.size()):
+                            col = cols.get(ci)
+                            if (
+                                col.getPath().toDotString() == "marketId"
+                                and col.getBloomFilterOffset() > 0
+                            ):
+                                found = True
+                finally:
+                    reader.close()
+                assert found, f"no bloom filter offset for marketId in {f}"
+            assert entry["count"] == rows, (index_path, key)
+    assert cleaned_db.size() == EXPECTED["rows"] - 1

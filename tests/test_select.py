@@ -3,6 +3,10 @@ tests/test_integration.py:250-393)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
+from tests.corpus import EXPECTED
+
 
 def test_projection_order_preserved(indexed_db):
     rows = indexed_db.select(["marketType", "marketId"], limit=1)
@@ -104,3 +108,42 @@ def test_select_partition_prunes_on_event_type(indexed_db):
 
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "eventTypeId" in m.group(1) and "7" in m.group(1), plan[:2000]
+
+
+def test_select_binds_its_own_database_index(indexed_db, fresh_corpus, monkeypatch):
+    """Two databases in one session: a select on the second database
+    that runs while the first select is being planned (injected into
+    the first call's dialect-function registration) must not rebind the
+    first select's index relation — the relation is bound per call,
+    not through a session-global view."""
+    from betfair_database_spark import database
+    from betfair_database_spark.database import BetfairDatabase
+
+    other = BetfairDatabase(fresh_corpus, spark=indexed_db.spark)
+    other.index()
+    register = database.register_sqlite_functions
+    calls = []
+
+    def register_then_select_other(spark):
+        register(spark)
+        calls.append(spark)
+        if len(calls) == 1:
+            other.select_df(["marketId"])
+
+    monkeypatch.setattr(
+        database, "register_sqlite_functions", register_then_select_other
+    )
+    rows = indexed_db.select(["marketMetadataFilePath"])
+    assert len(calls) == 2  # the interleaved select ran inside the first
+    assert len(rows) == EXPECTED["rows"]
+    base = f"{Path(indexed_db.database_dir).resolve()}/"
+    assert all(r["marketMetadataFilePath"].startswith(base) for r in rows)
+
+
+def test_brace_literal_in_where(indexed_db):
+    """User text reaches a keyword-formatted spark.sql: braces in it are
+    literal SQL, never format fields."""
+    rows = indexed_db.select(
+        ["marketId"], where="marketId <> '{x}' AND '{x}' = concat('{', 'x}')"
+    )
+    assert len(rows) == EXPECTED["rows"]
