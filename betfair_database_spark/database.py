@@ -14,6 +14,7 @@ import json
 import os
 import shutil
 import socket
+import threading
 import time
 from contextlib import contextmanager
 from pathlib import Path
@@ -60,9 +61,9 @@ class BetfairDatabase:
         self.spark = spark or get_spark()
         self._index_path = self.database_dir / INDEX_DIRNAME
         self.last_counters: Counters | None = None
-        # which path served the last select(): 'scan', 'rollup:builtin'
-        # or 'rollup:<name>' (round-10 auto-routing introspection)
-        self.last_select_route: str = "scan"
+        # per-thread backing of last_select_route: clients sharing one
+        # handle each read the route of their own last select()
+        self._route = threading.local()
         # Snapshot retention (Delta-style time travel over the versioned
         # manifest protocol): every commit also records its manifest under
         # _snapshots/v{N}.json; maintenance reaps only part-files that NO
@@ -84,6 +85,16 @@ class BetfairDatabase:
             raise ValueError("lock_lease_seconds must be > 0")
         self.lock_lease_seconds = float(lock_lease_seconds)
         self._lock_depth = 0
+
+    @property
+    def last_select_route(self) -> str:
+        """Which path served this thread's last select(): 'scan',
+        'rollup:builtin' or 'rollup:<name>'."""
+        return getattr(self._route, "value", "scan")
+
+    @last_select_route.setter
+    def last_select_route(self, route: str) -> None:
+        self._route.value = route
 
     # ------------------------------------------------------------- writer lock
 
@@ -1121,8 +1132,6 @@ def lease_file_lock(
     retried for one lease; a lost lease raises ConcurrentWriterError on
     exit (after the release) so the caller never trusts a possibly-raced
     commit silently."""
-    import threading
-
     if state is None:
         state = LeaseLockState()
     fd = None
@@ -1396,11 +1405,17 @@ def _write_part_files(frame: DataFrame, index_path: Path) -> dict[str, dict]:
         # queries select single markets); a parquet bloom filter lets
         # a 100 TB scan skip every row group that provably lacks the
         # id — the sort key covers RANGE predicates, blooms cover
-        # EQUALITY on the high-cardinality column the sort cannot
+        # EQUALITY on the high-cardinality column the sort cannot.
+        # Adaptive sizing: each file writer keeps 10 candidate filters
+        # (1 MiB down to 2 KiB) and on close writes the smallest whose
+        # 1%-FPP capacity covers the distinct ids it saw (~2 KiB for a
+        # file of 50 markets).
+        # The adaptive key is honoured only in its global form, and any
+        # expected.ndv setting turns it off; marketId is the only
+        # bloom-enabled column, so the global key touches nothing else.
         .option("parquet.bloom.filter.enabled#marketId", "true")
-        .option(
-            "parquet.bloom.filter.expected.ndv#marketId", "1000000"
-        )
+        .option("parquet.bloom.filter.adaptive.enabled", "true")
+        .option("parquet.bloom.filter.candidates.number#marketId", "10")
         .partitionBy("eventTypeId")
         .parquet(str(index_path))
     )

@@ -133,10 +133,15 @@ def test_index_parquet_has_marketid_bloom_filters(indexed_db, fresh_corpus, tmp_
     cannot prune. Assert EVERY part-file footer carries a bloom offset,
     for the files index() wrote, the files insert() appends (an insert
     into an empty database writes all of its part-files) and the files
-    clean() rewrites. The same footers pin the manifest invariant: each
+    clean() rewrites. Each filter is sized to its file's own ids (a
+    handful of markets gets a 2 KiB filter; one sized for a million ids,
+    ~1 MiB, fails the bound) and has no false negatives: every marketId
+    of a row group is found in that row group's filter. The same footers pin the manifest invariant: each
     committed partition's count is the sum of its listed files' row
     counts, and the listed files are exactly the part-files on disk."""
     from pathlib import Path
+
+    import pyarrow.parquet as pq
 
     from betfair_database_spark.database import BetfairDatabase, _manifest_read
     from tests.corpus import build_corpus
@@ -156,6 +161,7 @@ def test_index_parquet_has_marketid_bloom_filters(indexed_db, fresh_corpus, tmp_
     spark = indexed_db.spark
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
+    binary = jvm.org.apache.parquet.io.api.Binary
     for db in (indexed_db, inserted_db, cleaned_db):
         index_path = Path(db._index_path)
         manifest = _manifest_read(index_path)
@@ -174,6 +180,7 @@ def test_index_parquet_has_marketid_bloom_filters(indexed_db, fresh_corpus, tmp_
                     hpath, conf
                 )
                 reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
+                pf = pq.ParquetFile(f)
                 found = False
                 try:
                     blocks = reader.getFooter().getBlocks()
@@ -187,8 +194,50 @@ def test_index_parquet_has_marketid_bloom_filters(indexed_db, fresh_corpus, tmp_
                                 and col.getBloomFilterOffset() > 0
                             ):
                                 found = True
+                                length = col.getBloomFilterLength()
+                                assert 0 < length <= 64 * 1024, (f, length)
+                                bloom = reader.readBloomFilter(col)
+                                ids = pf.read_row_group(
+                                    bi, columns=["marketId"]
+                                ).column("marketId").to_pylist()
+                                assert ids, f
+                                for mid in ids:
+                                    assert bloom.findHash(
+                                        bloom.hash(binary.fromString(mid))
+                                    ), (f, mid)
                 finally:
                     reader.close()
                 assert found, f"no bloom filter offset for marketId in {f}"
             assert entry["count"] == rows, (index_path, key)
     assert cleaned_db.size() == EXPECTED["rows"] - 1
+
+
+def test_point_lookup_across_index_and_insert_files(spark, tmp_path):
+    """A marketId equality select is exact over a database built by
+    index() and grown by insert(): an absent id returns no rows, and
+    every id, whether its part-file (and bloom filter) came from index()
+    or from insert(), returns exactly its own row."""
+    import json
+
+    from betfair_database_spark.database import BetfairDatabase
+    from tests.corpus import build_corpus
+
+    root = tmp_path / "db"
+    build_corpus(root)
+    db = BetfairDatabase(root, spark=spark)
+    assert db.index() == EXPECTED["rows"]
+    src = tmp_path / "src"
+    src.mkdir()
+    # a cricket and a greyhound market: their partitions are rewritten by
+    # insert(), the horse and football partitions keep index()'s files
+    inserted = {"1.333000001": "1.222000001", "1.333000002": "1.222000002"}
+    for mid, template in inserted.items():
+        meta = json.loads((root / f"{template}.json").read_text())
+        meta["marketId"] = mid
+        (src / f"{mid}.json").write_text(json.dumps(meta))
+        (src / mid).write_text('{"op":"mcm"}')
+    assert db.insert(src, copy=True) == len(inserted)
+    assert db.select(["marketId"], where="marketId = '1.999999999'") == []
+    for mid in sorted(EXPECTED["indexed_market_ids"] | inserted.keys()):
+        rows = db.select(["marketId"], where=f"marketId = '{mid}'")
+        assert rows == [{"marketId": mid}], mid

@@ -1706,6 +1706,41 @@ class TestRollupRouting:
         assert db.last_select_route == "rollup:byvenue"
         assert got == want and got
 
+    def test_route_is_per_thread(self, env):
+        """Two clients on one handle each read the route of their own
+        last select(): both selects finish before either reads, so a
+        route shared across threads would show one of them the other's."""
+        import threading
+
+        db, _ = env
+        queries = {
+            "rollup:byvenue": dict(
+                columns=["eventVenue", "count(*) AS n"],
+                group_by=["eventVenue"],
+            ),
+            "scan": dict(columns=["marketId"]),
+        }
+        both_selected = threading.Barrier(len(queries), timeout=300)
+        seen, errors = {}, []
+
+        def client(want):
+            try:
+                assert db.select(**queries[want])
+                both_selected.wait()
+                seen[want] = db.last_select_route
+            except Exception as e:  # surfaced in the main thread
+                both_selected.abort()
+                errors.append(e)
+
+        threads = [threading.Thread(target=client, args=(w,)) for w in queries]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+            assert not t.is_alive()
+        assert not errors, errors
+        assert seen == {w: w for w in queries}
+
     def test_where_and_subset_dims_route(self, env, monkeypatch):
         from betfair_database_spark.database import BetfairDatabase
 
