@@ -21,6 +21,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from betfair_database_spark.const import (
     INDEX_DIRNAME,
@@ -64,6 +65,11 @@ class BetfairDatabase:
         # per-thread backing of last_select_route: clients sharing one
         # handle each read the route of their own last select()
         self._route = threading.local()
+        # Relation memo (_relation): source dir -> (key, DataFrame), one
+        # entry per source (the index, each rollup), shared by the threads
+        # that share this handle.
+        self._relations: dict[str, tuple[tuple, DataFrame]] = {}
+        self._relations_lock = threading.Lock()
         # Snapshot retention (Delta-style time travel over the versioned
         # manifest protocol): every commit also records its manifest under
         # _snapshots/v{N}.json; maintenance reaps only part-files that NO
@@ -735,15 +741,42 @@ class BetfairDatabase:
             for k, e in manifest.items()
             for name in e["files"]
         ]
-        if not paths:
-            df = self.spark.createDataFrame([], _index_schema())
-        else:
-            df = (
-                self.spark.read.schema(_index_schema())
-                .option("basePath", str(self._index_path))
-                .parquet(*paths)
-            )
-        return df.select(*SQL_TABLE_COLUMNS)  # contract order, partition col included
+        return self._relation(
+            paths, _index_schema(), self._index_path, SQL_TABLE_COLUMNS
+        )
+
+    def _relation(
+        self,
+        paths: list[str],
+        schema: StructType | None,
+        base: Path,
+        columns: tuple[str, ...] = (),
+    ) -> DataFrame:
+        """The relation over exactly ``paths`` under ``base``, memoized
+        on that input. Building one lists and stats every file, a fixed
+        cost per call that a warm select would otherwise pay each time.
+
+        The key is the sorted file list plus schema, ``base`` and
+        projection, never a snapshot number: ``index(force=True)``
+        restarts the numbering at 1 with new files. Part-file names carry
+        a fresh UUID per write and committed files are never rewritten in
+        place, so equal keys mean equal relations and nothing needs
+        invalidating. The value is a plain DataFrame handle, never
+        ``.cache()``d (Spark's CacheManager would serve an identical plan
+        stale data). One entry per ``base`` keeps memory bounded."""
+        key = (
+            tuple(sorted(paths)),
+            None if schema is None else schema.json(),
+            columns,
+        )
+        with self._relations_lock:
+            hit = self._relations.get(str(base))
+            if hit is None or hit[0] != key:
+                df = _read_parquet_files(self.spark, key[0], schema, base)
+                if columns:
+                    df = df.select(*columns)
+                hit = self._relations[str(base)] = (key, df)
+            return hit[1]
 
     def _partition_filter(self, touched: list[str | None]) -> F.Column:
         """Predicate matching rows in the given eventTypeId partitions
@@ -852,6 +885,19 @@ class BetfairDatabase:
             p.unlink(missing_ok=True)
             crc = p.parent / ("." + p.name + ".crc")
             crc.unlink(missing_ok=True)
+
+
+def _read_parquet_files(
+    spark: SparkSession, paths, schema: StructType | None, base: Path
+) -> DataFrame:
+    """A parquet relation over exactly ``paths``; partition columns are
+    discovered below ``base``. No files reads as an empty frame."""
+    if not paths:
+        return spark.createDataFrame([], schema)
+    reader = spark.read.option("basePath", str(base))
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(*paths)
 
 
 def _braces(text: str) -> str:

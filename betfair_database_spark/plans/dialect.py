@@ -136,9 +136,10 @@ letter (``%%Y``); results/inputs
 outside years 0001-9999 (SQLite spans -4713..9999; we render NULL there);
 single ms shifts beyond ±8e15 ms ≈ ±250k years NULL early (SQLite's own
 second/minute/hour limits run to ~14.7M years, values only ever visible
-through more NULLs); alphabetic literal characters in strftime format
-strings hit java.time pattern letters on the column path (the literal
-path refuses to fold and inherits the same delta);
+through more NULLs); alphabetic literal characters in COMPUTED strftime
+format strings hit java.time pattern letters in the generic macro (a
+literal format renders them verbatim on both the folded and the
+segmented column path);
 rendering of degenerate not-quite-real datetimes with NO modifier applied
 (SQLite echoes ``'2023-02-31'`` back verbatim from its raw-component
 cache; we normalize through the calendar, as SQLite itself does the
@@ -1023,8 +1024,8 @@ def _dyn_modifier_kernel(fname, base, mods, fmt, tz):
         raise ValueError(
             f"dynamic {fname}() modifiers hit an un-bridged corner "
             f"(mods={ml!r}): 'localtime'/'utc' need local_tz, and "
-            "strftime formats with alphabetic literal text are "
-            "SQL-path-only — use literal modifiers there"
+            "strftime formats with an un-bridged code or a lone "
+            "trailing '%' are SQL-path-only — use literal modifiers there"
         )
     return out[1]
 
@@ -1330,8 +1331,9 @@ _STRFTIME_CODES = set("YmdHMSfjwWsJ%")
 
 def _py_strftime(fmt: str, v: int) -> str | None:
     """Exact sqlite strftime over the bridged code set; returns None when
-    the format needs the SQL path (alphabetic literals would hit the SQL
-    path's java-pattern delta — keep both paths agreeing by not folding)."""
+    the format needs the SQL path (an un-bridged code or a lone trailing
+    '%'). Characters outside a %-code are copied verbatim, as SQLite does;
+    the segmented emitter renders them the same way on the column path."""
     if not (_MS_RENDER_LO <= v <= _MS_VALID_HI):
         return None
     days, ms_of_day = v // _DAY_MS, v % _DAY_MS
@@ -1346,8 +1348,6 @@ def _py_strftime(fmt: str, v: int) -> str | None:
     while i < n:
         c = fmt[i]
         if c != "%":
-            if c.isalpha() or c == "'":
-                return None  # SQL path (documented java-literal delta)
             out.append(c)
             i += 1
             continue

@@ -58,6 +58,7 @@ equals chronological min/max.
 from __future__ import annotations
 
 import json
+import os
 import shutil
 from pathlib import Path
 
@@ -838,14 +839,19 @@ def _spec_atomic_swap(db, path: Path, frame: DataFrame, meta: dict) -> int:
 
 
 def _read_partials(db, path: Path, meta: dict) -> DataFrame:
-    """A rollup's stored partials frame. Reading with the schema its
-    commit recorded skips the Spark job that parquet schema inference
-    runs on every read; rollups committed before the schema was recorded
-    fall back to inference."""
-    reader = db.spark.read
-    if "schema" in meta:
-        reader = reader.schema(StructType.fromJson(meta["schema"]))
-    return reader.parquet(str(path))
+    """A rollup's stored partials frame, through the handle's relation
+    memo keyed by the rollup's part-files: a swap writes new UUID-named
+    files, so a rebuilt rollup is a new key. Reading explicit files with
+    the schema its commit recorded skips Spark's directory listing and
+    the job that parquet schema inference runs; rollups committed before
+    the schema was recorded fall back to inference."""
+    files = [
+        str(path / n)
+        for n in os.listdir(path)
+        if n.endswith(".parquet") and not n.startswith((".", "_"))
+    ]
+    schema = StructType.fromJson(meta["schema"]) if "schema" in meta else None
+    return db._relation(files, schema, path)
 
 
 def spec_rollup_build(db, name: str | None, spec: dict) -> int:

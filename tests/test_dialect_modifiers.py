@@ -139,6 +139,25 @@ MATRIX = [
     "julianday('2023-01-01 10:00:00-00:30')",
 ]
 
+# Literal strftime formats with text outside the %-codes: SQLite copies
+# every such character verbatim (T/Z, words, a doubled quote, a
+# backslash, non-ASCII), so these fold to a string literal at translate
+# time. Part of the matrix.
+LITERAL_TEXT_FORMAT_ROWS = [
+    "strftime('%Y-%m-%dT%H:%M:%S.000Z','2023-07-27','+3 days')",
+    "strftime('%Y-%m-%dT%H:%M:%S.000Z','2023-12-31','+1 days')",
+    "strftime('%Y-%m-%dT%H:%M:%fZ','2023-07-27T10:20:30.125Z','+1 day','start of day')",
+    "strftime('%Y-%m-%dT%H:%MZ',1092941466,'unixepoch','+90 minutes')",
+    "strftime('Day %j of %Y, week %W','2024-03-01','-1 month')",
+    "strftime('%Y''s %m','2023-01-31','+1 month')",
+    "strftime('It''s %H o''clock','2023-07-27 20:30:00','+90 minutes')",
+    "strftime('%Y\\%m','2023-01-01','+1 month')",
+    "strftime('%d/%m été','2023-07-27','weekday 0')",
+    "strftime('T%%Z %s','2023-01-01','+1 day')",
+    "strftime('%Y-%m-%dT%H:%M:%S.000Z','2023-01-01','bogus')",
+]
+MATRIX += LITERAL_TEXT_FORMAT_ROWS
+
 
 def _compare(spark, exprs, batch=24):
     # batched SELECTs: folded chains inline their macros, so one giant
@@ -168,6 +187,24 @@ def _compare(spark, exprs, batch=24):
 
 def test_modifier_matrix_matches_sqlite(spark):
     _compare(spark, MATRIX)
+
+
+def test_literal_text_formats_fold_to_constants():
+    for e in LITERAL_TEXT_FORMAT_ROWS:
+        out = translate_where(e)
+        assert "sqlite_" not in out, (e, out)
+
+
+def test_time_range_upper_bound_folds():
+    """The benchmark's time_range predicate: its upper bound is fully
+    literal, so the translation is two plain string comparisons."""
+    where = (
+        "marketStartTime >= '2023-03-14T00:00:00.000Z' AND marketStartTime < "
+        "strftime('%Y-%m-%dT%H:%M:%S.000Z', '2023-03-14', '+7 days')"
+    )
+    out = translate_where(where)
+    assert "sqlite_" not in out, out
+    assert "'2023-03-21T00:00:00.000Z'" in out, out
 
 
 def test_modifier_chain_fuzz_matches_sqlite(spark):
@@ -912,6 +949,14 @@ class TestDynamicModifiers:
             spark,
             "strftime('%Y-%m-%d %H:%M', ts, mod)",
             "SELECT strftime('%Y-%m-%d %H:%M', ?, ?)",
+        )
+
+    def test_strftime_literal_text_format_dynamic_modifier(self, spark):
+        register_sqlite_functions(spark)
+        self._cmp(
+            spark,
+            "strftime('%Y-%m-%dT%H:%M:%S.000Z', ts, mod)",
+            "SELECT strftime('%Y-%m-%dT%H:%M:%S.000Z', ?, ?)",
         )
 
     def test_mixed_literal_and_dynamic_chain(self, spark):
