@@ -25,6 +25,7 @@ from pyspark.sql.types import StructType
 
 from betfair_database_spark.const import (
     INDEX_DIRNAME,
+    MARKET_DATA_FILE_PATH,
     MARKET_METADATA_FILE_PATH,
     SQL_TABLE_COLUMNS,
     DuplicatePolicy,
@@ -401,35 +402,32 @@ class BetfairDatabase:
         """What changed between two committed index snapshots (engine
         extension on the time-travel surface; the reference has no
         versioning at all): one row per difference with ``change_type``
-        in {added, removed, changed}, keyed by ``marketMetadataFilePath``
-        (the index's unique market key). ``to_version=None`` compares
-        against the live index.
+        in {added, removed, changed}, named by ``marketMetadataFilePath``.
+        Rows are matched on the index's row key, the (metadata path, data
+        path) pair (``_ROW_KEY``). ``to_version=None`` compares against
+        the live index.
 
         Plan: two snapshot reads full-outer-joined on the key — O(both
         snapshots' touched partitions), no driver-side row loops; the
-        'changed' test compares the remaining 36 columns as one struct
+        'changed' test compares the remaining 35 columns as one struct
         (null-safe). Snapshot readability rules are _read_index's
         (vacuumed history raises with the retained-version list)."""
-        key = MARKET_METADATA_FILE_PATH
         old = self._read_index(version=version)
         new = self._read_index(version=to_version)
-        rest = [c for c in SQL_TABLE_COLUMNS if c != key]
-        o = old.select(
-            F.col(key), F.struct(*rest).alias("_o"), F.lit(1).alias("_ol")
-        )
-        n = new.select(
-            F.col(key), F.struct(*rest).alias("_n"), F.lit(1).alias("_nl")
-        )
-        j = o.join(n, key, "full_outer")
+        rest = [c for c in SQL_TABLE_COLUMNS if c not in _ROW_KEY]
+        o = old.select(*_ROW_KEY, F.struct(*rest).alias("_o"))
+        n = new.select(*_ROW_KEY, F.struct(*rest).alias("_n"))
         change = (
-            F.when(F.col("_ol").isNull(), F.lit("added"))
-            .when(F.col("_nl").isNull(), F.lit("removed"))
+            F.when(F.col("_o").isNull(), F.lit("added"))
+            .when(F.col("_n").isNull(), F.lit("removed"))
             .when(~F.col("_o").eqNullSafe(F.col("_n")), F.lit("changed"))
         )
+        key = MARKET_METADATA_FILE_PATH
         return (
-            j.withColumn("change_type", change)
+            _join_on_row_key(o, n, "full_outer")
+            .withColumn("change_type", change)
             .where(F.col("change_type").isNotNull())
-            .select(key, "change_type")
+            .select(F.coalesce(key, "_r" + key).alias(key), "change_type")
         )
 
     def vacuum(self, retain_last: int | None = None) -> int:
@@ -630,47 +628,33 @@ class BetfairDatabase:
         returns the number of removed entries (reference database.py:188-230).
 
         The reference loops os.path.exists per row; here one distributed
-        listing + a left-semi join covers every in-directory path, and only
+        listing + a left-anti join covers every in-directory path, and only
         out-of-directory stragglers fall back to executor-side stat calls.
+        The rows found are retired by ``_upsert_partitions``.
         """
         with self._writer_lock():
             return self._clean_locked()
 
     def _clean_locked(self) -> int:
-        # materialize (not cache): materializes rows and truncates the
-        # plan, so the parquet swap below can't invalidate lazy reads and no
-        # identical-plan cache aliasing survives across calls.
-        index = materialize(self._read_index(), "clean-index-snapshot")
-        # _read_index reads exactly the files the committed manifest
-        # lists, so its counts are the snapshot's row count: no count job.
-        total = self.size()
-        base = str(self.database_dir.resolve())
-
         from betfair_database_spark.sources.discovery import list_files
 
+        index = self._read_index()
+        base = str(self.database_dir.resolve())
+        path = F.col(MARKET_DATA_FILE_PATH)
         existing = list_files(self.spark, str(self.database_dir)).select(
-            F.col("path").alias("marketDataFilePath")
+            F.col("path").alias(MARKET_DATA_FILE_PATH)
         )
-        in_dir = index.where(F.col("marketDataFilePath").startswith(base))
-        out_dir = index.where(~F.col("marketDataFilePath").startswith(base))
-        kept_in = in_dir.join(existing, "marketDataFilePath", "left_semi")
-        kept_out = out_dir.where(_exists_udf(F.col("marketDataFilePath")))
-        kept = kept_in.unionByName(kept_out)
-        kept = materialize(kept, "clean-kept-rows")
-        removed = total - kept.count()
-        if removed:
-            # Partition-scoped rewrite: only partitions that actually lost
-            # rows are rewritten; the rest of the index is untouched on disk.
-            removed_rows = index.join(
-                kept.select("marketMetadataFilePath"),
-                "marketMetadataFilePath",
-                "left_anti",
-            )
-            touched = [
-                r[0] for r in removed_rows.select("eventTypeId").distinct().collect()
-            ]
-            self._upsert_partitions(kept, touched)
-        return removed
+        in_dir = index.where(path.startswith(base)).join(
+            existing, MARKET_DATA_FILE_PATH, "left_anti"
+        )
+        # A NULL path names no file: its row goes too.
+        elsewhere = index.where(path.isNull() | ~path.startswith(base)).where(
+            ~_exists_udf(path)
+        )
+        # Cut: the upsert reads these rows twice; a replay would re-stat.
+        return self._upsert_partitions(
+            materialize(in_dir.unionByName(elsewhere), "clean-retired-rows")
+        )
 
     def insert(
         self,
@@ -788,28 +772,43 @@ class BetfairDatabase:
         return cond
 
     def _upsert_partitions(
-        self, replacement: DataFrame, touched: list[str | None]
-    ) -> None:
-        """Rewrite ONLY the eventTypeId= partitions in ``touched`` so that
-        they contain exactly ``replacement``'s rows for those partitions —
-        the set-based, O(touched-data) form of the reference's row-level
-        DELETE+INSERT (processor.py:365-384). Untouched partition
-        directories keep their part-files byte-for-byte; at a 100×-scale
-        index a maintenance batch pays for the partitions it touches, not
-        for the whole index.
+        self, retired: DataFrame, added: DataFrame | None = None
+    ) -> int:
+        """Delete the live index rows ``retired``, append ``added``, and
+        return how many rows were retired: the index's one write
+        primitive, the set-based form of the reference's DELETE+INSERT
+        (clean(), database.py:188-230; an insert() UPDATE,
+        processor.py:365-384).
 
-        ``replacement`` may contain rows outside ``touched`` (they are
-        filtered away here). eventTypeId has a few-dozen cardinality, so
-        collecting the touched list is O(sports), never O(rows)."""
+        Only the eventTypeId= partitions that lose or gain a row are
+        rewritten, as their live rows minus ``retired`` (matched on
+        ``_ROW_KEY``, null-safe) plus ``added``; untouched partitions
+        keep their part-files byte-for-byte. One collect over ``retired``
+        ∪ ``added`` finds them and the retired count: O(sports), never
+        O(rows)."""
+        parts = retired.select("eventTypeId", F.lit(1).alias("n"))
+        if added is not None:
+            parts = parts.unionByName(
+                added.select("eventTypeId", F.lit(0).alias("n"))
+            )
+        retired_per_part = dict(parts.groupBy("eventTypeId").sum("n").collect())
+        touched = list(retired_per_part)
         if not touched:
-            return
+            return 0
+        in_touched = self._partition_filter(touched)
+        # Every retired row is in a touched partition: the filter drops
+        # none, and lets the read behind ``retired`` prune to them.
+        replacement = _join_on_row_key(
+            self._read_index().where(in_touched),
+            retired.where(in_touched).select(*_ROW_KEY),
+            "left_anti",
+        )
+        if added is not None:
+            replacement = replacement.unionByName(added)
         manifest = self._committed_manifest()
         # Materialize first: the replacement lineage reads the very parquet
         # files the swap below retires.
-        repl = materialize(
-            replacement.where(self._partition_filter(touched)),
-            "upsert-replacement",
-        )
+        repl = materialize(replacement, "upsert-replacement")
         # Crash-atomic commit protocol (round 6). Readers resolve part-files
         # through the manifest (_read_index), and the manifest swap is an
         # atomic rename — so a crash at ANY point leaves every reader on a
@@ -875,6 +874,7 @@ class BetfairDatabase:
 
         rollup_update(self, repl, touched)
         spec_rollup_update(self, repl, touched)
+        return sum(retired_per_part.values())
 
     def _reap_files(self, rel_paths) -> None:
         """Delete index part-files (and their local-FS .crc siblings) that no
@@ -1131,6 +1131,19 @@ def _index_schema():
     from betfair_database_spark.const import INDEX_SCHEMA
 
     return INDEX_SCHEMA
+
+
+# The index's row key: the ETL dedups on it and insert() groups by it. Every
+# market of a bulk metadata.json shares its metadata path.
+_ROW_KEY = (MARKET_METADATA_FILE_PATH, MARKET_DATA_FILE_PATH)
+
+
+def _join_on_row_key(left: DataFrame, right: DataFrame, how: str) -> DataFrame:
+    """Join on ``_ROW_KEY``, null-safe; ``right``'s key columns are
+    renamed ``_r<column>``."""
+    right = right.withColumnsRenamed({k: "_r" + k for k in _ROW_KEY})
+    meta, data = (F.col(k).eqNullSafe(F.col("_r" + k)) for k in _ROW_KEY)
+    return left.join(right, meta & data, how)
 
 
 # Hive's directory name for the null partition value.
@@ -1600,7 +1613,7 @@ def _exists_udf(col):
     from pyspark.sql.functions import pandas_udf
 
     def _exists(paths):
-        return paths.map(os.path.exists)
+        return paths.map(lambda p: p is not None and os.path.exists(p))
 
     _exists.__annotations__ = {"paths": pd.Series, "return": pd.Series}
     return pandas_udf(_exists, "boolean")(col)

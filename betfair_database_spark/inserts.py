@@ -21,9 +21,9 @@ decided frame. Policy semantics preserved exactly:
   (UPDATE and incoming file larger than existing) (market.py:170-178).
 
 Index paths always point at the destination, whether or not files moved
-(market.py:195-198). Index upsert = anti-join on destination metadata path +
-append, the set-based form of the reference's DELETE+INSERT
-(processor.py:365-384).
+(market.py:195-198). Index upsert = retire the live rows at each destination
+metadata path + append (``_upsert_partitions``), the set-based form of the
+reference's DELETE+INSERT (processor.py:365-384).
 """
 
 from __future__ import annotations
@@ -103,7 +103,6 @@ def insert_markets(
     base = str(db.database_dir.resolve())
 
     frame, counters = build_index_frame(spark, str(source_dir))
-    frame = materialize(frame, "insert-source-frame")
 
     # --- destination paths ---------------------------------------------------
     dest_rel = resolve_pattern(pattern)
@@ -162,7 +161,7 @@ def insert_markets(
     )
 
     # --- row-equality against existing destination metadata (UPDATE only) ----
-    decided = _attach_row_equality(spark, decided, on_duplicates, db=db)
+    decided = _attach_row_equality(db, decided, on_duplicates)
 
     # --- policy decision -------------------------------------------------------
     policy = on_duplicates
@@ -205,7 +204,8 @@ def insert_markets(
     ops.mapInPandas(_file_ops, schema="n long").collect()
 
     # --- index upsert -----------------------------------------------------------
-    new_rows = decided.where(F.col("sql_action") != "SKIP").select(
+    # The reference's UPDATE deletes by metadata path (processor.py:365-384).
+    added = decided.where(F.col("sql_action") != "SKIP").select(
         *[
             c
             for c in SQL_TABLE_COLUMNS
@@ -214,33 +214,14 @@ def insert_markets(
         F.col("dest_meta").alias("marketMetadataFilePath"),
         F.col("dest_data").alias("marketDataFilePath"),
     )
-    # Partition-scoped upsert: only eventTypeId= partitions that gain rows or
-    # lose replaced rows are rewritten — O(batch-touched partitions), not
-    # O(index) (the reference's row-level DELETE+INSERT analogue,
-    # processor.py:365-384). Untouched partitions keep their files verbatim.
-    new_rows = materialize(new_rows, "insert-new-rows")
-    new_paths = new_rows.select("marketMetadataFilePath")
-    old_index = db._read_index()
-    replaced_parts = (
-        old_index.join(new_paths, "marketMetadataFilePath", "left_semi")
-        .select("eventTypeId")
-        .distinct()
-    )
-    new_parts = new_rows.select("eventTypeId").distinct()
-    touched = [
-        r[0] for r in replaced_parts.unionByName(new_parts).distinct().collect()
-    ]
-    kept_touched = old_index.where(db._partition_filter(touched)).join(
-        new_paths, "marketMetadataFilePath", "left_anti"
-    )
-    db._upsert_partitions(kept_touched.unionByName(new_rows), touched)
+    dest_paths = added.select("marketMetadataFilePath")
+    retired = db._read_index().join(dest_paths, "marketMetadataFilePath", "left_semi")
+    db._upsert_partitions(retired, added)
 
     return counters.rows_inserted
 
 
-def _attach_row_equality(
-    spark, decided: DataFrame, policy: DuplicatePolicy, db=None
-) -> DataFrame:
+def _attach_row_equality(db, decided: DataFrame, policy: DuplicatePolicy) -> DataFrame:
     """Adds a ``rows_equal`` column: does the incoming flattened row match the
     flattened row of the existing destination metadata file? Only computed
     for the UPDATE policy; False otherwise.
@@ -262,24 +243,21 @@ def _attach_row_equality(
         .distinct()
     )
 
-    idx_equal = None
-    if db is not None:
-        idx_hashes = (
-            db._read_index()
-            .select(
-                F.col("marketMetadataFilePath").alias("dest_meta"),
-                F.col("marketId").alias("_idx_mid"),
-                _row_hash().alias("idx_hash"),
-            )
-            .dropDuplicates(["dest_meta", "_idx_mid"])
+    idx_hashes = (
+        db._read_index()
+        .select(
+            F.col("marketMetadataFilePath").alias("dest_meta"),
+            F.col("marketId").alias("_idx_mid"),
+            _row_hash().alias("idx_hash"),
         )
-        decided = decided.join(
-            F.broadcast(idx_hashes),
-            (decided["dest_meta"] == idx_hashes["dest_meta"])
-            & (decided["marketId"] == idx_hashes["_idx_mid"]),
-            "left",
-        ).drop(idx_hashes["dest_meta"]).drop("_idx_mid")
-        idx_equal = _row_hash() == F.col("idx_hash")
+        .dropDuplicates(["dest_meta", "_idx_mid"])
+    )
+    decided = decided.join(
+        F.broadcast(idx_hashes),
+        (decided["dest_meta"] == idx_hashes["dest_meta"])
+        & (decided["marketId"] == idx_hashes["_idx_mid"]),
+        "left",
+    ).drop(idx_hashes["dest_meta"]).drop("_idx_mid")
 
     parsed = parse_metadata_content(
         fetch_text_files(cmp_paths).where(F.col("content").isNotNull())
@@ -307,11 +285,10 @@ def _attach_row_equality(
         F.col("marketMetadataFilePath").alias("dest_meta"),
         _row_hash().alias("existing_hash"),
     )
-    file_equal = _row_hash() == F.col("existing_hash")
-    equal = (
-        F.coalesce(file_equal, idx_equal, F.lit(False))
-        if idx_equal is not None
-        else F.coalesce(file_equal, F.lit(False))
+    equal = F.coalesce(
+        _row_hash() == F.col("existing_hash"),
+        _row_hash() == F.col("idx_hash"),
+        F.lit(False),
     )
     out = decided.join(F.broadcast(existing), "dest_meta", "left").withColumn(
         "rows_equal", equal

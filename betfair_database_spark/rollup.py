@@ -64,7 +64,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, functions as F
 
-from betfair_database_spark.plans.materialize import materialize
+# Unused, but bound like every maintenance module's for tracers to wrap.
+from betfair_database_spark.plans.materialize import materialize  # noqa: F401
 from pyspark.sql.types import (
     DateType,
     LongType,
@@ -891,9 +892,9 @@ def rollup_specs(db) -> list[tuple]:
 def _maintain(db, name, spec: dict, meta, repl: DataFrame, touched) -> None:
     """Partition-incremental maintenance of ONE rollup, called by the
     index upsert AFTER its manifest commit. ``repl`` is the checkpointed
-    replacement frame (may contain rows outside ``touched``; filtered
-    here exactly as the upsert filters), ``touched`` the eventTypeId
-    values whose index partitions were rewritten.
+    replacement frame (rows outside ``touched`` are filtered away here),
+    ``touched`` the eventTypeId values whose index partitions were
+    rewritten.
 
     Reads: the previous rollup file (small) + ``repl`` (in memory).
     Never re-reads the index parquet."""
@@ -920,10 +921,12 @@ def _maintain(db, name, spec: dict, meta, repl: DataFrame, touched) -> None:
     path = _path(db, name)
     keep = _read_partials(db, path, meta).where(~db._partition_filter(touched))
     fresh = summarize_spec(repl.where(db._partition_filter(touched)), spec)
+    # No cut: the swap's one write reads ``keep`` from the old rollup
+    # files and finishes before they are removed.
     _spec_atomic_swap(
         db,
         path,
-        materialize(keep.unionByName(fresh), "rollup-replacement"),
+        keep.unionByName(fresh),
         {"index_snapshot": snap, "spec": spec, "name": name},
     )
 

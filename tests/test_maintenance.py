@@ -72,6 +72,54 @@ def test_clean_removes_missing_data_files(mutable_db):
     assert mutable_db.clean() == 0  # idempotent
 
 
+def test_clean_removes_one_market_of_a_bulk_file(spark, fresh_corpus):
+    """Every market of a bulk metadata.json shares its metadata path, so
+    clean() retires a row by its (metadata, data) path pair: deleting one
+    bulk market's data file removes that market and no other."""
+    from betfair_database_spark.database import BetfairDatabase
+
+    db = BetfairDatabase(fresh_corpus, spark=spark)
+    db.index()
+    (fresh_corpus / "bulk" / "1.222000011").unlink()
+    assert db.clean() == 1
+    assert db.size() == EXPECTED["rows"] - 1
+    assert db.select(["marketId"], where="marketId = '1.222000011'") == []
+    assert len(db.select(["marketId"], where="marketId = '1.222000012'")) == 1
+    assert db.clean() == 0
+
+
+def test_update_moves_market_to_another_sport(spark, tmp_path):
+    """An UPDATE that changes a market's eventTypeId retires its row from
+    the old partition and writes it into the new one; the built-in
+    rollup follows."""
+    from betfair_database_spark.database import BetfairDatabase
+    from betfair_database_spark.rollup import summarize
+
+    target = tmp_path / "db"
+    target.mkdir()
+    src = tmp_path / "src"
+    build_corpus(src)
+    db = BetfairDatabase(target, spark=spark)
+    db.insert(src, copy=True)
+    db.create_rollup()
+    where = "marketId = '1.222000001'"
+    old = db.select(["eventTypeId"], where=where)[0]["eventTypeId"]
+    assert old == "4"
+
+    p = src / "1.222000001.json"
+    d = json.loads(p.read_text())
+    d["eventType"] = {"id": "1", "name": "Soccer"}
+    p.write_text(json.dumps(d))
+    assert db.insert(src, copy=True, on_duplicates="update") == 1
+
+    assert [r["eventTypeId"] for r in db.select(["eventTypeId"], where=where)] == ["1"]
+    assert db.select(["marketId"], where=f"{where} AND eventTypeId = '{old}'") == []
+    assert db.size() == EXPECTED["rows"]
+    assert {tuple(r) for r in db.rollup().collect()} == {
+        tuple(r) for r in summarize(db._read_index()).collect()
+    }
+
+
 class TestInsertPolicies:
     @pytest.fixture(scope="class")
     def env(self, spark, tmp_path_factory):
@@ -1631,6 +1679,19 @@ def test_snapshot_diff_reports_added_removed_changed(spark, tmp_path):
 
     # no self-diff noise
     assert db.diff(v1, v1).count() == 0
+
+
+def test_self_diff_of_an_indexed_bulk_file_is_empty(spark, fresh_corpus):
+    """Markets of one bulk metadata.json share a metadata path, so diff()
+    keys rows by the (metadata, data) path pair: a snapshot compared with
+    itself has no differences."""
+    from betfair_database_spark.database import BetfairDatabase
+
+    db = BetfairDatabase(fresh_corpus, spark=spark)
+    db.index()
+    v = db.snapshots()[-1]["version"]
+    assert db.diff(v).collect() == []
+    assert db.diff(v, v).collect() == []
 
 
 class TestRollupRouting:
