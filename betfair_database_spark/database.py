@@ -43,6 +43,7 @@ from betfair_database_spark.plans.dialect import (
     translate_where,
 )
 from betfair_database_spark.session import get_spark
+from betfair_database_spark.sources.fetch import file_size
 
 
 class BetfairDatabase:
@@ -627,34 +628,20 @@ class BetfairDatabase:
         """Delete index entries whose market data file no longer exists;
         returns the number of removed entries (reference database.py:188-230).
 
-        The reference loops os.path.exists per row; here one distributed
-        listing + a left-anti join covers every in-directory path, and only
-        out-of-directory stragglers fall back to executor-side stat calls.
-        The rows found are retired by ``_upsert_partitions``.
+        Like the reference's per-row os.path.exists, an executor-side stat
+        of each row's data file path finds them, wherever the path points;
+        ``_upsert_partitions`` retires them.
         """
         with self._writer_lock():
             return self._clean_locked()
 
     def _clean_locked(self) -> int:
-        from betfair_database_spark.sources.discovery import list_files
-
-        index = self._read_index()
-        base = str(self.database_dir.resolve())
-        path = F.col(MARKET_DATA_FILE_PATH)
-        existing = list_files(self.spark, str(self.database_dir)).select(
-            F.col("path").alias(MARKET_DATA_FILE_PATH)
-        )
-        in_dir = index.where(path.startswith(base)).join(
-            existing, MARKET_DATA_FILE_PATH, "left_anti"
-        )
         # A NULL path names no file: its row goes too.
-        elsewhere = index.where(path.isNull() | ~path.startswith(base)).where(
-            ~_exists_udf(path)
+        gone = self._read_index().where(
+            file_size(F.col(MARKET_DATA_FILE_PATH)).isNull()
         )
         # Cut: the upsert reads these rows twice; a replay would re-stat.
-        return self._upsert_partitions(
-            materialize(in_dir.unionByName(elsewhere), "clean-retired-rows")
-        )
+        return self._upsert_partitions(materialize(gone, "clean-retired-rows"))
 
     def insert(
         self,
@@ -1604,16 +1591,3 @@ def _list_partition_keys(index_path: Path) -> list[str]:
         for p in index_path.glob("eventTypeId=*")
         if p.is_dir()
     )
-
-
-def _exists_udf(col):
-    import os
-
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.functions import pandas_udf
-
-    def _exists(paths):
-        return paths.map(lambda p: p is not None and os.path.exists(p))
-
-    _exists.__annotations__ = {"paths": pd.Series, "return": pd.Series}
-    return pandas_udf(_exists, "boolean")(col)

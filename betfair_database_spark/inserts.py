@@ -2,10 +2,10 @@
 (reference: database.py:82-117, processor.py:335-387, market.py:135-198).
 
 The reference interleaves the policy decision with filesystem mutation per
-market; here the decision is a pure DataFrame computation (joins against the
-destination listing + a row-hash comparison against parsed destination
-metadata), and the filesystem mutation is an executor-side pass over the
-decided frame. Policy semantics preserved exactly:
+market; here the decision is a pure DataFrame computation (a stat of each
+market's own paths, never a listing of the database, + a row-hash comparison
+against parsed destination metadata), and the filesystem mutation is an
+executor-side pass over the decided frame. Policy semantics preserved exactly:
 
   metadata destination exists:
     REPLACE           → action UPDATE (always rewrite file + index row)
@@ -21,8 +21,9 @@ decided frame. Policy semantics preserved exactly:
   (UPDATE and incoming file larger than existing) (market.py:170-178).
 
 Index paths always point at the destination, whether or not files moved
-(market.py:195-198). Index upsert = retire the live rows at each destination
-metadata path + append (``_upsert_partitions``), the set-based form of the
+(market.py:195-198). Index upsert = retire the live rows at each written
+destination metadata path (at a bulk ``metadata.json``, only the written
+markets' rows) + append (``_upsert_partitions``), the set-based form of the
 reference's DELETE+INSERT (processor.py:365-384).
 """
 
@@ -36,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from betfair_database_spark.const import (
+    METADATA_FILE_NAME,
     SQL_TABLE_COLUMNS,
     DuplicatePolicy,
 )
@@ -46,8 +48,7 @@ from betfair_database_spark.functions.flatten import (
     definition_to_flat,
 )
 from betfair_database_spark.functions.patterns import resolve_pattern
-from betfair_database_spark.sources.discovery import list_files
-from betfair_database_spark.sources.fetch import fetch_text_files
+from betfair_database_spark.sources.fetch import fetch_text_files, file_size
 from betfair_database_spark.sources.metadata_reader import parse_metadata_content
 
 # Columns compared for the UPDATE-policy "has the row changed" check:
@@ -99,10 +100,9 @@ def insert_markets(
     pattern,
     on_duplicates: DuplicatePolicy,
 ) -> int:
-    spark = db.spark
     base = str(db.database_dir.resolve())
 
-    frame, counters = build_index_frame(spark, str(source_dir))
+    frame, counters = build_index_frame(db.spark, str(source_dir))
 
     # --- destination paths ---------------------------------------------------
     dest_rel = resolve_pattern(pattern)
@@ -129,39 +129,37 @@ def insert_markets(
         .select("dest_meta", "dest_data", "_r.*")
     )
 
-    # --- incoming data file sizes --------------------------------------------
-    src_listing = list_files(spark, str(source_dir)).select(
-        F.col("path").alias("marketDataFilePath"),
-        F.col("length").alias("incoming_size"),
-    )
-    decided = decided.join(src_listing, "marketDataFilePath", "left")
-
-    # --- existing destination files ------------------------------------------
-    db_listing = materialize(
-        list_files(spark, base).select("path", "length"), "insert-db-listing"
-    )
-    meta_listing = db_listing.select(
-        F.col("path").alias("dest_meta"), F.lit(True).alias("meta_exists")
-    )
-    data_listing = db_listing.select(
-        F.col("path").alias("dest_data"),
-        F.col("length").alias("existing_size"),
-        F.lit(True).alias("data_exists"),
-    )
+    # --- file facts: a stat of exactly the paths involved -------------------
+    # Cut: the file pass below moves files, so the sizes and existence it
+    # decides on are pinned before it runs.
     decided = materialize(
-        decided.join(meta_listing, "dest_meta", "left")
-        .join(data_listing, "dest_data", "left")
-        .withColumns(
+        decided.withColumns(
             {
-                "meta_exists": F.coalesce("meta_exists", F.lit(False)),
-                "data_exists": F.coalesce("data_exists", F.lit(False)),
+                "incoming_size": file_size("marketDataFilePath"),
+                "existing_size": file_size("dest_data"),
+                "meta_exists": file_size("dest_meta").isNotNull(),
             }
         ),
         "insert-decision-join",
     )
 
+    # --- live index rows at the batch's destinations -------------------------
+    # Every decided destination, whether or not its metadata file is still
+    # there: an indexed row whose file has gone is retired all the same.
+    # Cut: the row-equality join and the upsert's two reads of ``retired``.
+    dests = decided.select(F.col("dest_meta").alias("marketMetadataFilePath"))
+    live = materialize(
+        db._read_index()
+        .join(F.broadcast(dests.distinct()), "marketMetadataFilePath", "left_semi")
+        .select(
+            "marketMetadataFilePath", "marketDataFilePath", "eventTypeId", "marketId",
+            _row_hash().alias("row_hash"),
+        ),
+        "insert-live-rows",
+    )
+
     # --- row-equality against existing destination metadata (UPDATE only) ----
-    decided = _attach_row_equality(db, decided, on_duplicates)
+    decided = _attach_row_equality(decided, live, on_duplicates)
 
     # --- policy decision -------------------------------------------------------
     policy = on_duplicates
@@ -172,10 +170,10 @@ def insert_markets(
         .when(F.col("rows_equal"), F.lit("SKIP"))
         .otherwise(F.lit("UPDATE"))
     )
-    process_data = F.when(~F.col("data_exists"), F.lit(True)).otherwise(
+    process_data = F.when(F.col("existing_size").isNull(), F.lit(True)).otherwise(
         F.when(F.lit(policy is DuplicatePolicy.REPLACE), F.lit(True))
         .when(F.lit(policy is DuplicatePolicy.SKIP), F.lit(False))
-        .otherwise(F.col("incoming_size") > F.coalesce("existing_size", F.lit(0)))
+        .otherwise(F.col("incoming_size") > F.col("existing_size"))
     )
     decided = materialize(
         decided.withColumns(
@@ -205,6 +203,8 @@ def insert_markets(
 
     # --- index upsert -----------------------------------------------------------
     # The reference's UPDATE deletes by metadata path (processor.py:365-384).
+    # Every market of a bulk metadata.json shares its path: there only the
+    # rows of the markets this batch wrote go.
     added = decided.where(F.col("sql_action") != "SKIP").select(
         *[
             c
@@ -214,14 +214,21 @@ def insert_markets(
         F.col("dest_meta").alias("marketMetadataFilePath"),
         F.col("dest_data").alias("marketDataFilePath"),
     )
-    dest_paths = added.select("marketMetadataFilePath")
-    retired = db._read_index().join(dest_paths, "marketMetadataFilePath", "left_semi")
+    written = added.select("marketMetadataFilePath", "marketId").toDF("_w_meta", "_w_mid")
+    meta = F.col("marketMetadataFilePath")
+    bulk = F.element_at(F.split(meta, "/"), -1) == METADATA_FILE_NAME
+    same_market = F.col("marketId").eqNullSafe(F.col("_w_mid"))
+    retired = live.join(
+        F.broadcast(written), (meta == F.col("_w_meta")) & (~bulk | same_market), "left_semi"
+    )
     db._upsert_partitions(retired, added)
 
     return counters.rows_inserted
 
 
-def _attach_row_equality(db, decided: DataFrame, policy: DuplicatePolicy) -> DataFrame:
+def _attach_row_equality(
+    decided: DataFrame, live: DataFrame, policy: DuplicatePolicy
+) -> DataFrame:
     """Adds a ``rows_equal`` column: does the incoming flattened row match the
     flattened row of the existing destination metadata file? Only computed
     for the UPDATE policy; False otherwise.
@@ -230,8 +237,8 @@ def _attach_row_equality(db, decided: DataFrame, policy: DuplicatePolicy) -> Dat
     destination metadata file (the reference's exact comparison,
     market.py:152-158); (b) for markets whose destination metadata is a bulk
     ``metadata.json`` (unparseable as a single market — the reference has no
-    defined behavior there), fall back to the already-indexed row keyed on
-    (destination path, marketId)."""
+    defined behavior there), fall back to the hash of the ``live`` index row
+    keyed on (destination path, marketId)."""
     if policy is not DuplicatePolicy.UPDATE:
         return decided.withColumn("rows_equal", F.lit(False))
     # The comparison file set is data-dependent (this batch's collision
@@ -243,21 +250,14 @@ def _attach_row_equality(db, decided: DataFrame, policy: DuplicatePolicy) -> Dat
         .distinct()
     )
 
-    idx_hashes = (
-        db._read_index()
-        .select(
-            F.col("marketMetadataFilePath").alias("dest_meta"),
-            F.col("marketId").alias("_idx_mid"),
-            _row_hash().alias("idx_hash"),
-        )
-        .dropDuplicates(["dest_meta", "_idx_mid"])
+    idx_hashes = live.select("marketMetadataFilePath", "marketId", "row_hash").toDF(
+        "dest_meta", "marketId", "idx_hash"
     )
     decided = decided.join(
-        F.broadcast(idx_hashes),
-        (decided["dest_meta"] == idx_hashes["dest_meta"])
-        & (decided["marketId"] == idx_hashes["_idx_mid"]),
+        F.broadcast(idx_hashes.dropDuplicates(["dest_meta", "marketId"])),
+        ["dest_meta", "marketId"],
         "left",
-    ).drop(idx_hashes["dest_meta"]).drop("_idx_mid")
+    )
 
     parsed = parse_metadata_content(
         fetch_text_files(cmp_paths).where(F.col("content").isNotNull())

@@ -1,4 +1,5 @@
-"""Executor-side file fetch: content for exactly the paths in a frame.
+"""Executor-side file access: content and size for exactly the paths in a
+frame.
 
 The Spark-native file sources need a path list (or glob) known at plan time;
 when the file set is *data-dependent* (e.g. "the destination metadata files
@@ -13,10 +14,12 @@ driver-side.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType, StructField, StructType
 
 
@@ -41,3 +44,20 @@ def fetch_text_files(df: DataFrame, path_col: str = "path") -> DataFrame:
             yield out
 
     return df.mapInPandas(_read, schema=out_schema)
+
+
+def file_size(path: Column | str) -> Column:
+    """The size in bytes of the file at ``path``, stat-ed on the executor;
+    NULL when the path is NULL or names no file. A stat, never a Spark
+    listing: a listing skips paths with a component starting ``_`` or ``.``."""
+
+    def sizes(paths: pd.Series) -> pd.Series:
+        def size(p):
+            try:
+                return None if p is None else os.stat(p).st_size
+            except OSError:
+                return None
+
+        return pd.Series([size(p) for p in paths], dtype="Int64")
+
+    return pandas_udf(sizes, "long")(path)

@@ -18,8 +18,8 @@ INSERT_CUTS = [
     "etl-pairing",
     "etl-meta-content",
     "etl-flat-union",
-    "insert-db-listing",
     "insert-decision-join",
+    "insert-live-rows",
     "insert-decided",
     "upsert-replacement",
 ]

@@ -1249,6 +1249,7 @@ class TestMaterializedRollup:
         build_corpus(src)
         db = BetfairDatabase(target, spark=spark)
         db.insert(src, copy=True)
+        db.create_rollup()
         return db, src
 
     @staticmethod
