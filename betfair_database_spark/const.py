@@ -24,6 +24,11 @@ SQL_TABLE_NAME = "BetfairDatabaseIndex"
 METADATA_FILE_NAME = "metadata.json"
 DATA_FILE_SUFFIXES = ("", ".zip", ".gz", ".bz2")
 
+# Codec of every parquet file the engine writes (index part-files and
+# rollups), at its default level. Parquet records the codec per column
+# chunk, so files written earlier with another codec read unchanged.
+PARQUET_COMPRESSION = "zstd"
+
 MARKET_ID = "marketId"
 MARKET_METADATA_FILE_PATH = "marketMetadataFilePath"
 MARKET_DATA_FILE_PATH = "marketDataFilePath"

@@ -27,6 +27,7 @@ from betfair_database_spark.const import (
     INDEX_DIRNAME,
     MARKET_DATA_FILE_PATH,
     MARKET_METADATA_FILE_PATH,
+    PARQUET_COMPRESSION,
     SQL_TABLE_COLUMNS,
     DuplicatePolicy,
 )
@@ -1447,21 +1448,22 @@ def _write_part_files(frame: DataFrame, index_path: Path) -> dict[str, dict]:
         frame.repartition(F.col("eventTypeId"))
         .sortWithinPartitions("marketStartTime")
         .write.mode("append")
+        .option("compression", PARQUET_COMPRESSION)
         # marketId is the point-lookup key (the reference's README
         # queries select single markets); a parquet bloom filter lets
         # a 100 TB scan skip every row group that provably lacks the
         # id — the sort key covers RANGE predicates, blooms cover
         # EQUALITY on the high-cardinality column the sort cannot.
-        # Adaptive sizing: each file writer keeps 10 candidate filters
-        # (1 MiB down to 2 KiB) and on close writes the smallest whose
-        # 1%-FPP capacity covers the distinct ids it saw (~2 KiB for a
-        # file of 50 markets).
+        # Adaptive sizing: each file writer keeps 11 candidate filters
+        # (1 MiB down to 1 KiB, the writer's floor) and on close writes
+        # the smallest whose 1%-FPP capacity covers the distinct ids it
+        # saw (~1 KiB for a file of 50 markets).
         # The adaptive key is honoured only in its global form, and any
         # expected.ndv setting turns it off; marketId is the only
         # bloom-enabled column, so the global key touches nothing else.
         .option("parquet.bloom.filter.enabled#marketId", "true")
         .option("parquet.bloom.filter.adaptive.enabled", "true")
-        .option("parquet.bloom.filter.candidates.number#marketId", "10")
+        .option("parquet.bloom.filter.candidates.number#marketId", "11")
         .partitionBy("eventTypeId")
         .parquet(str(index_path))
     )

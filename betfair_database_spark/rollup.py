@@ -64,6 +64,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, functions as F
 
+from betfair_database_spark.const import PARQUET_COMPRESSION
 # Unused, but bound like every maintenance module's for tracers to wrap.
 from betfair_database_spark.plans.materialize import materialize  # noqa: F401
 from pyspark.sql.types import (
@@ -828,7 +829,9 @@ def _spec_atomic_swap(db, path: Path, frame: DataFrame, meta: dict) -> int:
     if tmp.exists():
         shutil.rmtree(tmp)
     schema = frame.schema
-    frame.coalesce(1).write.mode("overwrite").parquet(str(tmp))
+    frame.coalesce(1).write.mode("overwrite").option(
+        "compression", PARQUET_COMPRESSION
+    ).parquet(str(tmp))
     n = sum(pq.read_metadata(f).num_rows for f in tmp.glob("*.parquet"))
     (tmp / _META_NAME).write_text(
         json.dumps({**meta, "rows": n, "schema": schema.jsonValue()})

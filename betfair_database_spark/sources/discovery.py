@@ -1,10 +1,12 @@
 """Recursive file discovery and classification (reference: processor.py:165-193).
 
 The reference walks the tree once with ``rglob("*")`` and classifies by file
-name. Here the single walk is Spark's ``binaryFile`` listing (content column
-is never selected, so only the file index is materialized) and classification
-is a ``when/otherwise`` projection — one distributed listing job regardless
-of directory size.
+name. Here the single walk runs on the driver, as Spark's own file listing
+of a single root does, and hands its ``(path, length)`` rows to Spark as a
+local relation; classification is a ``when/otherwise`` projection over it.
+Unlike a Spark file source, the walk keeps paths under ``_``- or
+``.``-prefixed directories, as ``rglob("*")`` does; it skips only the
+engine's own ``.betfairdatabase*`` entries.
 
 Classification contract:
   - name starts with "1.": ``.json`` → metadata; ``.zip/.gz/.bz2`` → data;
@@ -19,6 +21,8 @@ compression/json suffix — the same key the reference builds with
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -28,19 +32,41 @@ KIND_METADATA = "metadata"
 KIND_DATA = "data"
 KIND_BULK = "bulk"
 
+# The engine's index, rollups, their swap directories and its lock file.
+_ENGINE_PREFIX = ".betfairdatabase"
+
 
 def list_files(spark: SparkSession, source_dir: str) -> DataFrame:
-    """One distributed listing of every file under source_dir.
+    """One walk of every file under source_dir, in path order.
 
-    Returns columns: path (posix, absolute), length (bytes).
+    Returns columns: path (posix, absolute), length (bytes). The frame is
+    a local relation: re-reading it never touches the disk again, and
+    filters over it fold into its rows without a Spark job.
     """
-    df = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .load(source_dir)
-        .select("path", "length")  # content column pruned → never read
+    import pyarrow as pa
+
+    paths, lengths = [], []
+    for root, dirs, files in os.walk(os.path.abspath(source_dir)):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(_ENGINE_PREFIX))
+        for name in sorted(files):
+            if name.startswith(_ENGINE_PREFIX):
+                continue
+            path = os.path.join(root, name)
+            try:
+                size = os.stat(path).st_size
+            except OSError:  # gone since the walk saw it, or a dangling link
+                continue
+            paths.append(path)
+            lengths.append(size)
+    # A pyarrow table, unlike a list of rows, becomes a LocalRelation.
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "path": pa.array(paths, pa.string()),
+                "length": pa.array(lengths, pa.int64()),
+            }
+        )
     )
-    return df.withColumn("path", F.regexp_replace("path", "^file:/*", "/"))
 
 
 def classify_files(listing: DataFrame) -> DataFrame:

@@ -134,8 +134,8 @@ def test_index_parquet_has_marketid_bloom_filters(indexed_db, fresh_corpus, tmp_
     for the files index() wrote, the files insert() appends (an insert
     into an empty database writes all of its part-files) and the files
     clean() rewrites. Each filter is sized to its file's own ids (a
-    handful of markets gets a 2 KiB filter; one sized for a million ids,
-    ~1 MiB, fails the bound) and has no false negatives: every marketId
+    handful of markets gets the writer's 1 KiB floor, 1,040 B with its
+    header; any larger candidate fails) and has no false negatives: every marketId
     of a row group is found in that row group's filter. The same footers pin the manifest invariant: each
     committed partition's count is the sum of its listed files' row
     counts, and the listed files are exactly the part-files on disk."""
@@ -195,7 +195,7 @@ def test_index_parquet_has_marketid_bloom_filters(indexed_db, fresh_corpus, tmp_
                             ):
                                 found = True
                                 length = col.getBloomFilterLength()
-                                assert 0 < length <= 64 * 1024, (f, length)
+                                assert length == 1040, (f, length)
                                 bloom = reader.readBloomFilter(col)
                                 ids = pf.read_row_group(
                                     bi, columns=["marketId"]
