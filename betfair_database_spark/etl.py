@@ -7,16 +7,19 @@ Spark — SURVEY §3.1).
              └─ bulk metadata ───┘
     ─ flatten projections (F1-F9) ─ racing broadcast join (J5) ─ index frame
 
-Every branch is a DataFrame; import counters (reference processor.py:35-79)
-are counts of the branch frames. The only Python-on-executor code is the zip
-codec (no Spark codec exists for zip).
+Every branch is a DataFrame. The import counters (reference
+processor.py:35-79) ride on work that runs anyway: each is a
+``DataFrame.observe`` metric of a lineage cut's job, or, for the market
+total, a projection of the listing's rows already on the driver. No job runs
+only to count. The only Python-on-executor code is the zip codec (no Spark
+codec exists for zip).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from betfair_database_spark.const import SQL_TABLE_COLUMNS
@@ -75,15 +78,17 @@ def build_index_frame(
     """Build the 37-column index frame for every market under source_dir.
 
     Returns the frame (unordered; dedup on the path pair applied) and the
-    import counters. The frame is lazily planned; the counters come from one
-    merged aggregate job over the checkpointed branch frames.
+    import counters. The frame is lazily planned past its last cut. The
+    counters are observed on the cuts' own jobs (pairing, derived
+    definitions, flat union) and on the listing's driver-side rows.
     """
-    counters = Counters()
-
     # The listing is a local relation, so a filter over it reads its rows
-    # on the driver without a Spark job: that is how has_bulk is answered.
+    # on the driver without a Spark job: that is how has_bulk and the
+    # market total are answered (observed metrics refuse DISTINCT).
     classified = classify_files(list_files(spark, source_dir))
     has_bulk = not classified.where(F.col("kind") == KIND_BULK).isEmpty()
+    stems = classified.where(F.col("kind").isin(KIND_METADATA, KIND_DATA))
+    total_markets = len({r.stem for r in stems.select("stem").collect()})
     # A local relation has no disk to re-list, so this cut protects nothing;
     # it stays as the listing's named step, where perfbench's trace counts
     # the files listed (sources.files_listed).
@@ -121,11 +126,20 @@ def build_index_frame(
     # --- pairing (J1) + anti-joins (J2/J3) ----------------------------------
     # One full-outer join materializes all three pairing relationships
     # (paired / metadata-only / data-only) in a single shuffle; the inner and
-    # anti variants are filters over it, and the J2/J3 counters are aggregates
-    # over the same checkpointed frame instead of separate join jobs.
+    # anti variants are filters over it, and the J2/J3 counters are observed
+    # on the job that cuts it, not counted by separate join jobs.
+    pairing_obs = Observation()
     pairing = materialize(
-        meta_files.join(data_remaining, "stem", "full_outer"), "etl-pairing"
+        meta_files.join(data_remaining, "stem", "full_outer").observe(
+            pairing_obs,
+            F.count("*").alias("rows"),
+            F.count_if(F.col("data_path").isNull()).alias("no_data"),
+            F.count_if(F.col("path").isNull()).alias("orphans"),
+        ),
+        "etl-pairing",
     )
+    pair_stats = pairing_obs.get
+    n_paired = pair_stats["rows"] - pair_stats["no_data"] - pair_stats["orphans"]
     paired = pairing.where(
         F.col("path").isNotNull() & F.col("data_path").isNotNull()
     ).select("stem", "path", "data_path", "length")
@@ -140,12 +154,21 @@ def build_index_frame(
     # common case) → no token-scan job, no derived-file write pass.
     lines = definition_lines(orphan_data.select(F.col("data_path").alias("path")))
     latest_plan = extract_latest_definitions(lines)
-    has_orphans = orphan_data.limit(1).count() > 0
-    latest = (
-        materialize(latest_plan, "etl-derived-defs")
-        if has_orphans
-        else latest_plan.limit(0)
-    )
+    has_orphans = pair_stats["orphans"] > 0
+    if has_orphans:
+        defs_obs = Observation()
+        latest = materialize(
+            latest_plan.observe(
+                defs_obs,
+                F.count("*").alias("token_files"),
+                F.count_if("corrupt").alias("corrupt_data"),
+            ),
+            "etl-derived-defs",
+        )
+        defs_stats = defs_obs.get
+    else:
+        latest = latest_plan.limit(0)
+        defs_stats = {"token_files": 0, "corrupt_data": 0}
 
     derived_ok = latest.where(F.col("defn").isNotNull())
     # No checkpoint: both consumers (the file-write pass and the definition
@@ -169,20 +192,17 @@ def build_index_frame(
         )
 
     # --- parse paired metadata files (S2) ------------------------------------
-    # Fetch exactly the paired metadata files; the parse replays over the
-    # checkpointed content (in-memory), so its two consumers (stats + the
-    # good branch) cost one extra from_json pass, not a file re-read.
-    meta_content = materialize(
-        fetch_text_files(paired.select("path")), "etl-meta-content"
-    )
-    parsed = parse_metadata_content(meta_content)
-
-    good = parsed.where(~F.col("corrupt")).join(
-        paired.select(F.col("path"), F.col("data_path")), "path", "inner"
-    )
-
-    # --- counters: ONE job over the checkpointed branch frames ---------------
-    _fill_counters(counters, listing, pairing, latest, parsed)
+    # Fetch exactly the paired metadata files, read by the flat-union job
+    # below, once for the catalogue branch and once for the definition
+    # branch. The corrupt count is observed on the catalogue branch's parse
+    # only: one observed node in the plan, below every filter.
+    parsed = parse_metadata_content(fetch_text_files(paired.select("path")))
+    meta_obs = Observation()
+    observed = parsed.observe(meta_obs, F.count_if("corrupt").alias("corrupt"))
+    paired_paths = paired.select("path", "data_path")
+    good = ~F.col("corrupt")
+    good_cat = observed.where(good & ~F.col("is_definition")).join(paired_paths, "path")
+    good_def = parsed.where(good & F.col("is_definition")).join(paired_paths, "path")
 
     # The flatten projection is the largest expression tree in the engine
     # (37 columns × per-row-timezone logic); analyzing and codegen-compiling
@@ -197,11 +217,11 @@ def build_index_frame(
             F.col("data_path").alias("marketDataFilePath"),
         )
 
-    cat_in = _with_paths(good.where(~F.col("is_definition")), "cat", "path").unionByName(
+    cat_in = _with_paths(good_cat, "cat", "path").unionByName(
         _with_paths(bulk_paired.where(~F.col("is_definition")), "cat", "bulk_path")
     )
     def_in = (
-        _with_paths(good.where(F.col("is_definition")), "defn", "path")
+        _with_paths(good_def, "defn", "path")
         .unionByName(
             derived.select(
                 F.col("defn").alias("m"),
@@ -223,6 +243,18 @@ def build_index_frame(
     # Materialize the flattened union once: the racing build side and the
     # probe side both consume it — recomputing doubles execution time.
     flat = materialize(cat_flat.unionByName(def_flat), "etl-flat-union")
+    # With no paired rows, adaptive execution finds the join's paired side
+    # empty and never runs the observed parse, so its Observation holds no
+    # row and .get fails: nothing was parsed, so 0.
+    corrupt_meta = meta_obs.get["corrupt"] if n_paired else 0
+    counters = Counters(
+        total_markets=total_markets,
+        markets_without_data=pair_stats["no_data"],
+        # orphan data files minus those that yielded at least one
+        # definition-token line (corrupt or not): the token-less ones
+        markets_without_metadata=pair_stats["orphans"] - defs_stats["token_files"],
+        corrupt_files=corrupt_meta + defs_stats["corrupt_data"],
+    )
 
     # --- racing enrichment (J5: broadcast build/probe) -----------------------
     enriched = enrich_with_racing(flat)
@@ -232,46 +264,3 @@ def build_index_frame(
     )
     return index, counters
 
-
-def _fill_counters(
-    counters: Counters,
-    listing: DataFrame,
-    pairing: DataFrame,
-    latest: DataFrame,
-    parsed: DataFrame,
-) -> None:
-    """All import counters in ONE Spark job: a union of one-row aggregates
-    over the already-checkpointed branch frames. No rescans (the inputs are
-    materialized) and no per-counter count() jobs.
-
-    markets_without_metadata = orphan data files minus files that yielded at
-    least one definition-token line (corrupt or not): the token-less ones.
-    """
-
-    def one(df: DataFrame, name: str, expr: F.Column) -> DataFrame:
-        return df.agg(F.coalesce(expr, F.lit(0)).cast("long").alias("v")).select(
-            F.lit(name).alias("k"), "v"
-        )
-
-    frames = [
-        one(
-            listing,
-            "total",
-            F.count_distinct(
-                F.when(F.col("kind").isin(KIND_METADATA, KIND_DATA), F.col("stem"))
-            ),
-        ),
-        one(pairing, "no_data", F.sum(F.col("data_path").isNull().cast("int"))),
-        one(pairing, "orphans", F.sum(F.col("path").isNull().cast("int"))),
-        one(latest, "token_files", F.count("*")),
-        one(latest, "corrupt_data", F.sum(F.col("corrupt").cast("int"))),
-        one(parsed, "corrupt_meta", F.sum(F.col("corrupt").cast("int"))),
-    ]
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    stats = {r.k: r.v for r in out.collect()}
-    counters.total_markets = stats["total"]
-    counters.markets_without_data = stats["no_data"]
-    counters.markets_without_metadata = stats["orphans"] - stats["token_files"]
-    counters.corrupt_files = stats["corrupt_meta"] + stats["corrupt_data"]

@@ -33,7 +33,7 @@ from collections.abc import Iterator
 from pathlib import Path
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from betfair_database_spark.const import (
@@ -182,14 +182,16 @@ def insert_markets(
         "insert-decided",
     )
 
-    n = dict(decided.groupBy("sql_action").count().collect())
-    counters.markets_updated = n.get("UPDATE", 0)
-    counters.markets_skipped = n.get("SKIP", 0)
-    counters.rows_inserted = n.get("INSERT", 0) + counters.markets_updated
-    db.last_counters = counters
-
     # --- filesystem mutation (executor-side) ----------------------------------
-    ops = decided.select(
+    # The pass counts the decided actions as it goes (observed metrics).
+    actions = Observation()
+    ops = decided.observe(
+        actions,
+        *[
+            F.count_if(F.col("sql_action") == a).alias(a)
+            for a in ("INSERT", "UPDATE", "SKIP")
+        ],
+    ).select(
         F.col("marketMetadataFilePath").alias("src_meta"),
         F.col("marketDataFilePath").alias("src_data"),
         "dest_dir",
@@ -200,6 +202,11 @@ def insert_markets(
         F.lit(copy).alias("is_copy"),
     )
     ops.mapInPandas(_file_ops, schema="n long").collect()
+    n = actions.get
+    counters.markets_updated = n["UPDATE"]
+    counters.markets_skipped = n["SKIP"]
+    counters.rows_inserted = n["INSERT"] + counters.markets_updated
+    db.last_counters = counters
 
     # --- index upsert -----------------------------------------------------------
     # The reference's UPDATE deletes by metadata path (processor.py:365-384).

@@ -1,8 +1,9 @@
-"""The lineage cuts (``materialize`` roles) that insert() and clean() take.
+"""The lineage cuts (``materialize`` roles) that index(), insert() and
+clean() take.
 
 A cut costs a Spark job and a copy of its frame, so each one must have a
 second consumer, or hold rows whose files the write removes. The lists
-below are exact: a cut added on either path fails here by name."""
+below are exact: a cut added on any of these paths fails here by name."""
 
 from __future__ import annotations
 
@@ -11,12 +12,11 @@ from pathlib import Path
 
 import pytest
 
-from tests.corpus import build_corpus
+from tests.corpus import EXPECTED, build_corpus
 
 INSERT_CUTS = [
     "etl-listing",
     "etl-pairing",
-    "etl-meta-content",
     "etl-flat-union",
     "insert-decision-join",
     "insert-live-rows",
@@ -24,6 +24,16 @@ INSERT_CUTS = [
     "upsert-replacement",
 ]
 CLEAN_CUTS = ["clean-retired-rows", "upsert-replacement"]
+# The fixture corpus has a bulk metadata.json and orphan data files, so
+# index() takes the two cuts that only those branches need.
+INDEX_CUTS = [
+    "etl-listing",
+    "etl-bulk-content",
+    "etl-pairing",
+    "etl-derived-defs",
+    "etl-flat-union",
+]
+EMPTY_INDEX_CUTS = ["etl-listing", "etl-pairing", "etl-flat-union"]
 
 
 @pytest.fixture(scope="module")
@@ -81,3 +91,15 @@ def test_clean_cuts(env, roles):
     Path(victim[0]["marketDataFilePath"]).unlink()
     assert db.clean() == 1
     assert roles == CLEAN_CUTS
+
+
+def test_index_cuts(spark, roles, fresh_corpus, tmp_path):
+    from betfair_database_spark.database import BetfairDatabase
+
+    assert BetfairDatabase(fresh_corpus, spark=spark).index() == EXPECTED["rows"]
+    assert roles == INDEX_CUTS
+    roles.clear()
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert BetfairDatabase(empty, spark=spark).index() == 0
+    assert roles == EMPTY_INDEX_CUTS
